@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 import org.locationtech.jts.geom._
 import org.locationtech.jts.io.{WKBReader, WKBWriter, WKTReader, WKTWriter}
@@ -13,17 +13,17 @@ import org.locationtech.jts.io.{WKBReader, WKBWriter, WKTReader, WKTWriter}
   * exactly what the reference stores in parquet. Planar math only; the
   * reference does no reprojection.
   *
-  * All functions are null-safe (null in → null out) and registered both as
-  * Scala `Column` helpers and SQL names (`spark.udf.register`), so C37 SQL
-  * queries and DataFrame programs share one implementation.
+  * All functions are null-safe (null in → null out) and offered both as
+  * Scala `Column` helpers and SQL names (GraftExtensions.functions lists the
+  * SQL names), so C37 SQL queries and DataFrame programs share one
+  * implementation.
   *
-  * Scale note: these are Scala UDFs. Being UDF-opaque is mitigated where it
-  * matters at scale: spatial FILTERS gain sargable range predicates via
-  * plans.SpatialFilterRule + the __bbox_<col> covering columns (so pushdown does
-  * not depend on seeing through the UDF), and the embedding hot path has a
-  * native codegen Expression (functions.CosineSimilarity) as the
-  * demonstrated upgrade pattern for any ST_* function that becomes a
-  * bottleneck (SURVEY.md §4.3).
+  * Scale note: the hot spatial functions (predicates, distance, overlay,
+  * accessors, envelope) are native codegen Expressions in graft.functions;
+  * the rest stay Scala UDFs over the scalar `*F` kernels below, which tests
+  * also use as JTS reference implementations. Spatial FILTERS gain sargable
+  * range predicates via plans.SpatialFilterRule + the __bbox_<col> covering
+  * columns (SURVEY.md §4.3).
   */
 object GeoFunctions extends Serializable {
 
@@ -208,9 +208,7 @@ object GeoFunctions extends Serializable {
   }
 
   // ---- Column API ---------------------------------------------------------
-  // Every helper carries .withName so the ScalaUDF node's udfName is set on
-  // the DataFrame path too — plans.SpatialFilterRule matches by udfName, and
-  // without this only SQL-registered invocations got __bbox pushdown.
+  // UDF helpers carry .withName so plans and errors show the SQL name.
   // native constructor (byte-identical to toWkb(point) — see StMakePoint)
   def st_point(x: Column, y: Column): Column =
     native2(graft.functions.StMakePoint.apply)(x, y)
@@ -230,7 +228,11 @@ object GeoFunctions extends Serializable {
   val st_length = udf(stLengthF).withName("st_length")
   val st_npoints = udf(stNPointsF).withName("st_npoints")
   val st_centroid = udf(stCentroidF).withName("st_centroid")
-  def st_convexhull(g: Column): Column = st_convexhull_native(g)
+  def st_convexhull(g: Column): Column = {
+    import org.apache.spark.sql.GraftColumnBridge
+    GraftColumnBridge.column(
+      graft.functions.StConvexHullExpr(GraftColumnBridge.expression(g)))
+  }
   // st_distance / st_dwithin route through NATIVE expressions
   // (functions.WkbDistance): point-point byte fast path, codegen-resident.
   def st_distance(a: Column, b: Column): Column =
@@ -273,12 +275,7 @@ object GeoFunctions extends Serializable {
       GraftColumnBridge.expression(g), GraftColumnBridge.expression(d),
       GraftColumnBridge.expression(quadSegments)))
   }
-  def st_convexhull_native(g: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(
-      graft.functions.StConvexHullExpr(GraftColumnBridge.expression(g)))
-  }
-  // EWKB SRID accessors — native, matching the SQL names WkbOverlay owns.
+  // EWKB SRID accessors — native, the same nodes as SQL st_srid/st_setsrid.
   def st_srid(g: Column): Column = {
     import org.apache.spark.sql.GraftColumnBridge
     GraftColumnBridge.column(
@@ -302,43 +299,13 @@ object GeoFunctions extends Serializable {
   val st_geohash = udf(stGeohashF).withName("st_geohash")
   val st_astext = udf(stAsTextF).withName("st_astext")
   val st_geomfromtext = udf(stGeomFromTextF).withName("st_geomfromtext")
-  // struct<xmin,ymin,xmax,ymax> with stable field names
-  val st_envelope = udf(stEnvelopeF).withName("st_envelope")
   /** Envelope struct via the NATIVE byte-walking expression
     * (functions.StEnvelope) — the hot path under every __bbox covering
-    * column; the UDF form above stays for API compatibility.
+    * column.
     */
   def stEnvelopeStruct(c: Column): Column = {
     import org.apache.spark.sql.GraftColumnBridge
     GraftColumnBridge.column(
       graft.functions.StEnvelope(GraftColumnBridge.expression(c)))
-  }
-
-  def register(spark: SparkSession): Unit = synchronized {
-    // ONLY names with no native-Expression owner are registered as UDFs.
-    // st_x/st_y/st_point (WkbAccessors), the predicates/distance family
-    // (WkbPredicates/WkbDistance) and the overlay+srid family (WkbOverlay)
-    // get their SQL names from their own `register` methods — registering
-    // a UDF under the same name first would be dead on arrival (the native
-    // createOrReplaceTempFunction wins) and floods every session log with
-    // SimpleFunctionRegistry "replaced a previously registered function"
-    // warnings.
-    spark.udf.register("st_makebox", stMakeBoxF)
-    spark.udf.register("st_geometrytype", stGeometryTypeF)
-    spark.udf.register("st_area", stAreaF)
-    spark.udf.register("st_length", stLengthF)
-    spark.udf.register("st_perimeter", stLengthF)
-    spark.udf.register("st_npoints", stNPointsF)
-    spark.udf.register("st_centroid", stCentroidF)
-    spark.udf.register("st_astext", stAsTextF)
-    spark.udf.register("st_geomfromtext", stGeomFromTextF)
-    spark.udf.register("st_collect", stCollectF)
-    spark.udf.register("st_simplify", stSimplifyF)
-    spark.udf.register("st_asgeojson", stAsGeoJsonF)
-    spark.udf.register("st_geomfromgeojson", stGeomFromGeoJsonF)
-    spark.udf.register("st_geohash", stGeohashF)
-    spark.udf.register("st_makeline", stMakeLineF)
-    spark.udf.register("st_startpoint", stStartPointF)
-    spark.udf.register("st_endpoint", stEndPointF)
   }
 }

@@ -50,10 +50,12 @@ object Graft {
       geometryColumn: String = "geometry"): Unit =
     geo.GeoParquet.write(df, path, Seq(geometryColumn))
 
-  /** Ensure engine function registration on a session we did not build
-    * (Verify/Bench receive a driver-configured session).
+  /** Install graft's SQL names and optimizer rules
+    * ([[GraftExtensions.functions]], [[GraftExtensions.rules]]) on a session
+    * we did not build (Verify/Bench receive a driver-configured session).
+    * Idempotent.
     */
-  def prepare(spark: SparkSession): SparkSession = {
+  def prepare(spark: SparkSession): SparkSession = synchronized {
     // st_srid/st_setsrid DELIBERATELY shadow Spark 4.1's GeometryType
     // builtins (graft's operate on WKB BinaryType — SURVEY §1.2 keeps WKB
     // as the core representation). SimpleFunctionRegistry WARNs on every
@@ -66,28 +68,16 @@ object Graft {
     val registryLogger = "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry"
     val prior = LogManager.getLogger(registryLogger).getLevel
     Configurator.setLevel(registryLogger, Level.ERROR)
-    try doPrepare(spark)
-    finally Configurator.setLevel(registryLogger, prior)
+    try {
+      val registry = spark.sessionState.functionRegistry
+      GraftExtensions.functions.foreach { case (name, info, build) =>
+        registry.registerFunction(name, info, build)
+      }
+    } finally Configurator.setLevel(registryLogger, prior)
+    val installed = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations =
+      installed ++ GraftExtensions.rules.filterNot(installed.contains)
     spark
-  }
-
-  private def doPrepare(spark: SparkSession): Unit = {
-    GeoFunctionRegistry.registerAll(spark)
-    TextFunctionRegistry.registerAll(spark)
-    graft.functions.CosineSimilarity.register(spark)
-    graft.functions.StEnvelope.register(spark)
-    graft.functions.WkbPredicates.register(spark) // native st_intersects & co.
-    graft.functions.WkbDistance.register(spark) // native st_distance/st_dwithin
-    graft.functions.WkbOverlay.register(spark) // native buffer/hull/union/intersection/srid
-    graft.functions.JsonGetScalar.register(spark)
-    graft.functions.PackAscii8.register(spark)
-    graft.functions.HtmlMeta.register(spark)
-    graft.functions.MetaCharset.register(spark)
-    graft.functions.MimeSniff.register(spark)
-    graft.functions.WkbAccessors.register(spark) // after UDF registry: SQL
-    // names st_x/st_y route to the native expressions
-    graft.plans.SpatialFilterRule.register(spark)
-    graft.plans.SpatialJoinRule.register(spark)
   }
 
   // --- Oracle-exact arithmetic helpers (SURVEY.md §5.2) -------------------

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.udf
 
 /** Deterministic text-pipeline primitives (SURVEY.md §2 block E).
@@ -575,24 +574,4 @@ object TextFunctions extends Serializable {
     graft.operators.Multimodal.audioEnvelopeHash64(b).map(java.lang.Long.valueOf).orNull
   val imageThumbF: Array[Byte] => Array[Double] = b =>
     graft.operators.Multimodal.imageThumb64(b).orNull
-
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("minhash128", minhash128F)
-    spark.udf.register("simhash64", simhashF)
-    spark.udf.register("fingerprint64", fingerprintF)
-    spark.udf.register("lang_id", langIdF)
-    spark.udf.register("hash64", hash64F)
-    spark.udf.register("image_ahash64", imageAHashF)
-    spark.udf.register("audio_envelope_hash64", audioEnvelopeHashF)
-    spark.udf.register("image_thumb64", imageThumbF)
-    graft.functions.CharTrigrams.register(spark)
-    graft.functions.UnicodeNorm.register(spark)
-    graft.functions.HtmlStrip.register(spark)
-    graft.functions.UrlNormalize.register(spark)
-    graft.functions.UrlResolve.register(spark)
-    graft.functions.HtmlLinks.register(spark)
-    graft.functions.SentenceSplit.register(spark)
-    graft.functions.CharsetSniff.register(spark)
-    graft.functions.HtmlBlocks.register(spark)
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -73,13 +72,4 @@ object CharTrigrams {
       }
     }
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_trigrams", exprs => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"char_trigrams expects 1 argument, got ${exprs.length}")
-        CharTrigrams(exprs.head)
-      }, "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
@@ -93,23 +92,6 @@ object CharsetSniff {
       .onUnmappableCharacter(java.nio.charset.CodingErrorAction.REPLACE)
     val out = dec.decode(java.nio.ByteBuffer.wrap(bin, off, bin.length - off))
     UTF8String.fromString(out.toString)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "detect_charset", exprs => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"detect_charset expects 1 argument, got ${exprs.length}")
-        DetectCharsetExpr(exprs.head)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sniff_text", exprs => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"sniff_text expects 1 argument, got ${exprs.length}")
-        SniffTextExpr(exprs.head)
-      }, "built-in")
   }
 }
 

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -143,15 +142,6 @@ object HtmlBlocks {
     flush()
     new GenericArrayData(out.toArray())
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "html_blocks", exprs => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"html_blocks expects 1 argument, got ${exprs.length}")
-        HtmlBlocksExpr(exprs.head)
-      }, "built-in")
 }
 
 case class HtmlBlocksExpr(child: Expression)

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -78,23 +77,6 @@ object HtmlLinks {
       } else i += 1
     }
     new GenericArrayData(out.toArray)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "html_links", exprs => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"html_links expects 1 argument, got ${exprs.length}")
-        HtmlLinksExpr(exprs.head)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "html_anchors", exprs => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"html_anchors expects 1 argument, got ${exprs.length}")
-        HtmlAnchorsExpr(exprs.head)
-      }, "built-in")
   }
 
   /** `html_anchors(html)` — anchors WITH their anchor text:

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -206,15 +205,6 @@ object HtmlMeta {
     StructField("description", StringType),
     StructField("lang", StringType),
     StructField("charset", StringType)))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "html_meta", exprs => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"html_meta expects 1 argument, got ${exprs.length}")
-        HtmlMetaExpr(exprs.head)
-      }, "built-in")
 }
 
 case class HtmlMetaExpr(child: Expression)
@@ -397,30 +387,6 @@ object MetaCharset {
       .onUnmappableCharacter(java.nio.charset.CodingErrorAction.REPLACE)
     val out = dec.decode(java.nio.ByteBuffer.wrap(bin, off, bin.length - off))
     UTF8String.fromString(out.toString)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "meta_charset", exprs => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"meta_charset expects 1 argument, got ${exprs.length}")
-        MetaCharsetExpr(exprs.head)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "detect_charset_html", exprs => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"detect_charset_html expects 1 argument, got ${exprs.length}")
-        DetectCharsetHtmlExpr(exprs.head)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sniff_text_html", exprs => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"sniff_text_html expects 1 argument, got ${exprs.length}")
-        SniffTextHtmlExpr(exprs.head)
-      }, "built-in")
   }
 }
 

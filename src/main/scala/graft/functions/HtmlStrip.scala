@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -171,15 +170,6 @@ object HtmlStrip {
     }
     UTF8String.fromString(out.toString)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "html_text", exprs => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"html_text expects 1 argument, got ${exprs.length}")
-        HtmlText(exprs.head)
-      }, "built-in")
 }
 
 case class HtmlText(child: Expression)

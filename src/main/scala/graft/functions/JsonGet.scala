@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -197,14 +196,4 @@ object JsonGetScalar {
     }
     null
   }
-
-  /** SQL registration: `graft_json_get(json, key)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_json_get", exprs => {
-        if (exprs.length != 2)
-          throw new IllegalArgumentException(
-            s"graft_json_get expects 2 arguments (json, key), got ${exprs.length}")
-        JsonGetScalar(exprs(0), exprs(1))
-      }, "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
@@ -137,15 +136,6 @@ object MimeSniff {
     if (CharsetSniff.charsetOf(b).toString != "windows-1252") "text/plain"
     else "application/octet-stream"
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "detect_mime", exprs => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"detect_mime expects 1 argument, got ${exprs.length}")
-        DetectMimeExpr(exprs.head)
-      }, "built-in")
 }
 
 case class DetectMimeExpr(child: Expression)

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
@@ -57,23 +56,6 @@ object PackAscii8 {
     var i = 0
     while (i < n) { bits = (bits << 8) | (s.getByte(i) & 0xffL); i += 1 }
     bits << (8 * (8 - n))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pack_ascii8", exprs => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"pack_ascii8 expects 1 argument, got ${exprs.length}")
-        PackAscii8(exprs.head)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pack_upper_ascii8", exprs => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"pack_upper_ascii8 expects 1 argument, got ${exprs.length}")
-        PackUpperAscii8(exprs.head)
-      }, "built-in")
   }
 }
 

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -83,15 +82,6 @@ object SentenceSplit {
     emit(start, n)
     new GenericArrayData(out.toArray)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "split_sentences", exprs => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"split_sentences expects 1 argument, got ${exprs.length}")
-        SentenceSplitExpr(exprs.head)
-      }, "built-in")
 }
 
 case class SentenceSplitExpr(child: Expression)

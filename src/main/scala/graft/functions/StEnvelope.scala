@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.GeoFunctions
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -132,8 +131,4 @@ object StEnvelope {
     if (e.isNull) null
     else new GenericInternalRow(Array[Any](e.getMinX, e.getMinY, e.getMaxX, e.getMaxY))
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "st_envelope_native", exprs => StEnvelope(exprs.head), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -62,23 +61,6 @@ object UnicodeNorm {
       UTF8String.fromString(
         java.text.Normalizer.normalize(sb.toString, java.text.Normalizer.Form.NFC))
     }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"nfc_normalize expects 1 argument, got ${exprs.length}")
-        NfcNormalize(exprs.head)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "strip_accents", exprs => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"strip_accents expects 1 argument, got ${exprs.length}")
-        StripAccents(exprs.head)
-      }, "built-in")
-  }
 }
 
 case class NfcNormalize(child: Expression)

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -153,15 +152,6 @@ object UrlNormalize {
     out.append(path).append(qn)
     UTF8String.fromString(out.toString)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "url_normalize", exprs => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"url_normalize expects 1 argument, got ${exprs.length}")
-        UrlNormalizeExpr(exprs.head)
-      }, "built-in")
 }
 
 case class UrlNormalizeExpr(child: Expression)

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -142,15 +141,6 @@ object UrlResolve {
     out.append(path).append(query).append(rFrag)
     UTF8String.fromString(out.toString)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "url_resolve", exprs => {
-        if (exprs.length != 2)
-          throw new IllegalArgumentException(
-            s"url_resolve expects 2 arguments, got ${exprs.length}")
-        UrlResolveExpr(exprs.head, exprs(1))
-      }, "built-in")
 }
 
 case class UrlResolveExpr(left: Expression, right: Expression)

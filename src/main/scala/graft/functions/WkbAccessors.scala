@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.GeoFunctions
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -136,29 +135,5 @@ object StMakePoint {
     val bits = java.lang.Double.doubleToLongBits(v)
     var i = 0
     while (i < 8) { b(offset + i) = ((bits >>> (8 * i)) & 0xff).toByte; i += 1 }
-  }
-}
-
-object WkbAccessors {
-  /** Replaces the SQL-path st_x/st_y/st_point UDF registrations with the
-    * native expressions (the Column-helper UDFs in GeoFunctions stay
-    * available as building blocks).
-    */
-  private def arity(name: String, n: Int)(
-      f: Seq[Expression] => Expression): Seq[Expression] => Expression =
-    es => {
-      if (es.length != n)
-        throw new IllegalArgumentException(
-          s"$name expects $n argument(s), got ${es.length}")
-      f(es)
-    }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "st_x", arity("st_x", 1)(es => StX(es.head)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "st_y", arity("st_y", 1)(es => StY(es.head)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "st_point", arity("st_point", 2)(es => StMakePoint(es(0), es(1))), "built-in")
   }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.GeoFunctions
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, DoubleType}
@@ -45,22 +44,6 @@ object WkbDistance {
       val dy = readD(a, 13) - readD(b, 13)
       math.sqrt(dx * dx + dy * dy) <= r
     } else GeoFunctions.fromWkb(a).isWithinDistance(GeoFunctions.fromWkb(b), r)
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("st_distance", es => {
-      if (es.length != 2)
-        throw new IllegalArgumentException(
-          s"st_distance expects 2 arguments (WKB, WKB), got ${es.length}")
-      StDistanceExpr(es(0), es(1))
-    }, "built-in")
-    reg.createOrReplaceTempFunction("st_dwithin", es => {
-      if (es.length != 3)
-        throw new IllegalArgumentException(
-          s"st_dwithin expects 3 arguments (WKB, WKB, radius), got ${es.length}")
-      StDWithinExpr(es(0), es(1), es(2))
-    }, "built-in")
-  }
 }
 
 case class StDistanceExpr(left: Expression, right: Expression)

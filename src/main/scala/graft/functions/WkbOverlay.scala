@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.GeoFunctions
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
   ImplicitCastInputTypes, Literal, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -245,38 +244,4 @@ case class StTransformExpr(first: Expression, second: Expression,
   }
   override protected def withNewChildrenInternal(f: Expression, s: Expression,
       t: Expression): StTransformExpr = copy(f, s, t)
-}
-
-object WkbOverlay {
-
-  private def arity(name: String, n: Int)(
-      f: Seq[Expression] => Expression): Seq[Expression] => Expression =
-    es => {
-      if (es.length != n)
-        throw new IllegalArgumentException(s"$name expects $n arguments, got ${es.length}")
-      f(es)
-    }
-
-  def register(spark: SparkSession): Unit = {
-    val r = spark.sessionState.functionRegistry
-    r.createOrReplaceTempFunction("st_union",
-      arity("st_union", 2)(es => StUnionExpr(es(0), es(1))), "built-in")
-    r.createOrReplaceTempFunction("st_intersection",
-      arity("st_intersection", 2)(es => StIntersectionExpr(es(0), es(1))), "built-in")
-    r.createOrReplaceTempFunction("st_buffer",
-      es => es.length match {
-        case 2 => StBufferExpr(es(0), es(1))
-        case 3 => StBuffer3Expr(es(0), es(1), es(2))
-        case n => throw new IllegalArgumentException(
-          s"st_buffer expects 2 or 3 arguments, got $n")
-      }, "built-in")
-    r.createOrReplaceTempFunction("st_convexhull",
-      arity("st_convexhull", 1)(es => StConvexHullExpr(es(0))), "built-in")
-    r.createOrReplaceTempFunction("st_srid",
-      arity("st_srid", 1)(es => StSridExpr(es(0))), "built-in")
-    r.createOrReplaceTempFunction("st_setsrid",
-      arity("st_setsrid", 2)(es => StSetSridExpr(es(0), es(1))), "built-in")
-    r.createOrReplaceTempFunction("st_transform",
-      arity("st_transform", 3)(es => StTransformExpr(es(0), es(1), es(2))), "built-in")
-  }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.GeoFunctions
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType}
@@ -113,26 +112,4 @@ case class StWithinExpr(left: Expression, right: Expression) extends WkbPredicat
   override protected def relateLeftPrepared(p: PreparedGeometry, r: Geometry): Boolean =
     p.within(r)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
-}
-
-object WkbPredicates {
-  /** Replace the SQL-path UDF registrations with the native expressions
-    * (Column helpers in GeoFunctions route through the same nodes).
-    */
-  private def arity2(name: String)(
-      f: (Expression, Expression) => Expression): Seq[Expression] => Expression =
-    es => {
-      if (es.length != 2)
-        throw new IllegalArgumentException(
-          s"$name expects 2 arguments (WKB, WKB), got ${es.length}")
-      f(es(0), es(1))
-    }
-
-  def register(spark: SparkSession): Unit = {
-    val r = spark.sessionState.functionRegistry
-    r.createOrReplaceTempFunction("st_intersects", arity2("st_intersects")(StIntersectsExpr.apply), "built-in")
-    r.createOrReplaceTempFunction("st_disjoint", arity2("st_disjoint")(StDisjointExpr.apply), "built-in")
-    r.createOrReplaceTempFunction("st_contains", arity2("st_contains")(StContainsExpr.apply), "built-in")
-    r.createOrReplaceTempFunction("st_within", arity2("st_within")(StWithinExpr.apply), "built-in")
-  }
 }

@@ -1,7 +1,6 @@
 package graft.plans
 
 import graft.GeoFunctions
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -30,7 +29,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, StructType}
   * constrained by the first column's envelope — each predicate prunes on
   * its own covering column or not at all.
   *
-  * Registered via `spark.experimental.extraOptimizations` (Graft.prepare).
+  * Installed through GraftExtensions.rules (the session extension's
+  * optimizer batch, or `experimental.extraOptimizations` via Graft.prepare).
   * That batch runs after predicate pushdown, which is fine: FileSourceStrategy
   * re-collects filters sitting above the relation at physical planning, so
   * conjuncts added here still reach the scan.
@@ -47,8 +47,7 @@ object SpatialFilterRule extends Rule[LogicalPlan] {
       // consult the cached footer) only runs when a spatial predicate is
       // actually present.
       val cands = conjuncts(cond).flatMap {
-        case u: ScalaUDF => harvestUdf(u)
-        case n: graft.functions.WkbPredicate => harvestNative(n)
+        case n: graft.functions.WkbPredicate => harvest(n)
         case _ => None
       }
       if (cands.isEmpty) f
@@ -116,28 +115,16 @@ object SpatialFilterRule extends Rule[LogicalPlan] {
     case x => Seq(x)
   }
 
-  /** (geometry attribute tested, literal query geometry) for the UDF form. */
-  private def harvestUdf(u: ScalaUDF): Option[(Attribute, Array[Byte])] = {
-    val name = u.udfName.getOrElse("")
-    val args = u.children
-    // a user-registered UDF may reuse these names with any arity — never
-    // index past its actual children (the optimizer must not throw)
-    if (args.length != 2) return None
-    name match {
-      case "st_intersects" => symmetric(args(0), args(1))
-      case "st_within" => directed(geom = args(0), region = args(1))
-      case "st_contains" => directed(geom = args(1), region = args(0))
-      case _ => None
-    }
-  }
-
-  /** Same harvest for the NATIVE predicate nodes (functions.WkbPredicates):
-    * st_intersects takes the literal on either side (symmetric envelope
-    * test); st_within needs the literal REGION on the right, st_contains
-    * on the left. st_disjoint gets NO conjunct — its matching rows have
-    * non-overlapping envelopes, the opposite of the bbox test.
+  /** (geometry attribute tested, literal query geometry) of a native
+    * predicate node (functions.WkbPredicates): st_intersects takes the
+    * literal on either side (symmetric envelope test); st_within needs the
+    * literal REGION on the right, st_contains on the left. st_disjoint gets
+    * NO conjunct — its matching rows have non-overlapping envelopes, the
+    * opposite of the bbox test. A user's own ScalaUDF that reuses one of
+    * these names is never matched: its meaning is unknown, so a bbox
+    * conjunct could drop rows it keeps.
     */
-  private def harvestNative(
+  private def harvest(
       p: graft.functions.WkbPredicate): Option[(Attribute, Array[Byte])] = {
     import graft.functions.{StContainsExpr, StIntersectsExpr, StWithinExpr}
     p match {
@@ -189,11 +176,5 @@ object SpatialFilterRule extends Rule[LogicalPlan] {
         GreaterThanOrEqual(fld("xmax"), lo(env.getMinX))),
       And(LessThanOrEqual(fld("ymin"), hi(env.getMaxY)),
         GreaterThanOrEqual(fld("ymax"), lo(env.getMinY))))
-  }
-
-  def register(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(SpatialFilterRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ SpatialFilterRule
   }
 }

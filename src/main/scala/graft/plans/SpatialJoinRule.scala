@@ -218,8 +218,9 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
   }
 
   /** The first top-level spatial conjunct whose geometries each reference
-    * exactly one input. Handles the native graft expressions plus
-    * user-registered ScalaUDFs carrying the standard names.
+    * exactly one input. Only the native graft predicate nodes route: a
+    * user's own ScalaUDF that reuses one of their names may mean anything,
+    * so envelope-overlap candidates could miss pairs it accepts.
     */
   private def harvest(cond: Expression, l: LogicalPlan,
       r: LogicalPlan): Option[Route] = {
@@ -243,11 +244,6 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
       case graft.functions.StContainsExpr(a, b) => symmetric(a, b)
       case graft.functions.StWithinExpr(a, b) => symmetric(a, b)
       case graft.functions.StDWithinExpr(a, b, rad) => dwithin(a, b, rad)
-      case u: ScalaUDF if u.children.length == 2 &&
-          Seq("st_intersects", "st_contains", "st_within").exists(u.udfName.contains) =>
-        symmetric(u.children(0), u.children(1))
-      case u: ScalaUDF if u.children.length == 3 && u.udfName.contains("st_dwithin") =>
-        dwithin(u.children(0), u.children(1), u.children(2))
       case _ => None
     }.headOption
   }
@@ -396,11 +392,5 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
       // restore the original join's schema (attribute order AND exprIds)
       .select((j.output.map(a => column(a))): _*)
     joined.queryExecution.analyzed
-  }
-
-  def register(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(SpatialJoinRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ SpatialJoinRule
   }
 }

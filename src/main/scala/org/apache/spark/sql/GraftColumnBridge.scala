@@ -19,4 +19,15 @@ object GraftColumnBridge {
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Arity and function builder of the ScalaUDF node that
+    * `spark.udf.register(name, f)` installs (graft.GraftExtensions lists
+    * its scalar UDFs through this, so no session is needed to build them).
+    */
+  def scalaUdf(name: String,
+      f: expressions.UserDefinedFunction): (Int, Seq[Expression] => Expression) = {
+    val named = f.withName(name).asInstanceOf[expressions.SparkUserDefinedFunction]
+    (named.inputEncoders.size,
+      es => classic.UserDefinedFunctionUtils.toScalaUDF(named, es))
+  }
 }

@@ -191,7 +191,7 @@ class GeoFunctionsSpec extends AnyFunSuite {
         GeoFunctions.st_union(col("ga"), col("gb")).as("u"),
         GeoFunctions.st_intersection(col("ga"), col("gb")).as("i"),
         GeoFunctions.st_buffer(col("p"), org.apache.spark.sql.functions.lit(2.0)).as("buf"),
-        GeoFunctions.st_convexhull_native(col("cloud")).as("hull"))
+        GeoFunctions.st_convexhull(col("cloud")).as("hull"))
     assert(!df.queryExecution.executedPlan.toString.contains("ScalaUDF"))
     val row = df.head()
     assert(row.getAs[Array[Byte]]("u").sameElements(stUnionF(a, b)))

@@ -147,9 +147,8 @@ class SpatialRuleSpec extends AnyFunSuite {
     GeoParquet.write(df, out, Seq("geometry"), addBboxColumn = true)
 
     val queryBox = GeoFunctions.stMakeBoxF(100.0, 0.0, 110.0, 1000.0)
-    // The Column helper path: udf(...).withName sets ScalaUDF.udfName, which
-    // is what SpatialFilterRule matches on — without it this plan silently
-    // lost pushdown while the call_udf path above kept it.
+    // The Column helper builds the same native predicate node that the SQL
+    // name resolves to, so both paths must prune alike.
     val q = GeoParquet.read(spark, out)
       .filter(GeoFunctions.st_intersects(col("geometry"), lit(queryBox)))
       .select(col("id"))
@@ -159,6 +158,37 @@ class SpatialRuleSpec extends AnyFunSuite {
       plan.contains("LessThanOrEqual(__bbox_geometry.xmin,110.0)"),
       s"bbox predicates not pushed on the DataFrame path:\n$plan")
     assert(q.collect().map(_.getLong(0)).sorted.toSeq === (100L to 110L))
+  }
+
+  test("a user's own st_within UDF is not matched by the spatial rules") {
+    val out = "/tmp/graft_test/spatial_rule_user_udf"
+    val df = spark.range(1000).toDF("id")
+      .select(col("id"),
+        GeoFunctions.st_point(col("id").cast("double"), (col("id") * 2).cast("double"))
+          .as("geometry"))
+    GeoParquet.write(df, out, Seq("geometry"), addBboxColumn = true)
+
+    // a separate session, so the shared session keeps graft's st_within
+    val ns = spark.newSession()
+    Graft.prepare(ns)
+    ns.udf.register("st_within", (_: Array[Byte], _: Array[Byte]) => true)
+    val box = GeoFunctions.stMakeBoxF(100.0, 0.0, 110.0, 1000.0)
+
+    // filter: a bbox conjunct from the name alone would keep only 100..110
+    val q = GeoParquet.read(ns, out)
+      .filter(call_udf("st_within", col("geometry"), lit(box)))
+      .select(col("id"))
+    assert(q.count() === 1000L, s"user UDF was treated as graft's st_within:\n" +
+      q.queryExecution.executedPlan)
+
+    // join: grid routing from the name alone would drop every pair, as no
+    // point's envelope overlaps the far box
+    val pts = ns.range(10).toDF("id")
+      .select(col("id"), GeoFunctions.st_point(col("id").cast("double"), lit(0.0)).as("g"))
+    import ns.implicits._
+    val far = Seq((0L, GeoFunctions.stMakeBoxF(500.0, 500.0, 510.0, 510.0))).toDF("rid", "rg")
+    val j = pts.join(far, call_udf("st_within", col("g"), col("rg")))
+    assert(j.count() === 10L, s"user UDF join was routed:\n${j.queryExecution.executedPlan}")
   }
 
   test("two-geometry dataset: each filter prunes on ITS OWN covering column") {
