@@ -2,13 +2,15 @@ package graft.geo
 
 import graft.GeoFunctions
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.MetadataBuilder
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.types.{MetadataBuilder, StructType}
 
 /** GeoParquet I/O (SURVEY.md §2 A1/A2): parquet files whose footer carries
   * the `geo` JSON metadata and whose geometry columns are WKB bytes.
@@ -23,10 +25,18 @@ import scala.jdk.CollectionConverters._
   * distributed byte-level rewrite (`injectFooterInto` — row-group copy,
   * no decode/re-encode).
   *
-  * Read path: ordinary `spark.read.parquet` (vectorized reader, pushdown,
-  * pruning all intact) + footer `geo` decode from the first part file,
-  * re-attached as Spark column `Metadata` so downstream code can discover
-  * geometry columns and CRS without re-reading footers.
+  * Read path: one listing and one footer open, no Spark job. The first
+  * part file's footer (first by path, hidden `_`/`.` names skipped as
+  * Spark's file index skips them) gives both the `geo` metadata and the
+  * Spark schema — converted by the same function Spark's schema-inference
+  * job runs on that same file — and the DataFrame is an ordinary
+  * `spark.read.schema(..).parquet` (vectorized reader, pushdown, partition
+  * discovery all intact). Geometry columns carry the `geo` entries as
+  * Spark column `Metadata`, so downstream code can discover geometry
+  * columns and CRS without re-reading footers. With
+  * `spark.sql.parquet.mergeSchema` on, or when no part file is found, the
+  * schema comes from Spark's own inference instead, since merging needs
+  * every file's footer.
   */
 object GeoParquet {
 
@@ -160,8 +170,7 @@ object GeoParquet {
     if (computeStats && statsFromWritten) {
       // write plain, then stats from the materialized bytes + retrofit
       save(out.write.mode("overwrite").format("parquet"))
-      val written = df.sparkSession.read.parquet(path)
-      injectFooterInto(df.sparkSession, path, toJson(statsOf(written)))
+      injectFooterInto(df.sparkSession, path, toJson(statsOf(read(df.sparkSession, path))))
     } else if (spatialClusterFiles.isDefined) {
       // Clustered path: the input plan would otherwise execute three times
       // (stats aggregate, range-partitioner sampling, final write) — and a
@@ -205,25 +214,50 @@ object GeoParquet {
     */
   def injectFooterInto(spark: SparkSession, path: String, geoJson: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val parts = listParquetFiles(new Path(path), conf)
+    val parts = listParquetFiles(new Path(path), conf).map(_.getPath.toString)
     spark.sparkContext.parallelize(parts, parts.length.max(1))
       .foreach(injectFooter(_, geoJson))
     invalidateMetadata(path)
   }
 
-  /** Recursive listing — partitioned writes nest part files under
-    * partition directories.
+  /** The dataset's part files, by the rule Spark's file index lists them:
+    * names starting with `_` (unless a `key=value` partition directory) or
+    * `.` are skipped, so a leftover `_temporary/` attempt directory or a
+    * `.crc` side file is never taken for data. A `listStatus` walk — no
+    * block-location lookups, which `listFiles` pays per file.
     */
-  private def listParquetFiles(root: Path, conf: Configuration): Seq[String] = {
+  private def listParquetFiles(root: Path, conf: Configuration): Seq[FileStatus] = {
     val fs = root.getFileSystem(conf)
-    val out = Seq.newBuilder[String]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) out += f.getPath.toString
+    def walk(dir: Path): Seq[FileStatus] = fs.listStatus(dir).toSeq.flatMap { s =>
+      val name = s.getPath.getName
+      if ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".")) Nil
+      else if (s.isDirectory) walk(s.getPath)
+      else if (name.endsWith(".parquet")) Seq(s)
+      else Nil
     }
-    out.result()
+    walk(root)
   }
+
+  /** Footer of the dataset's first part file by path — the file Spark's
+    * schema inference reads — or of `path` itself when it is a file.
+    * Row groups are skipped: only the schema and key-value metadata are
+    * used.
+    */
+  private def firstFooter(spark: SparkSession, path: String): Option[Footer] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val root = p.getFileSystem(conf).getFileStatus(p)
+    val first =
+      if (root.isDirectory) listParquetFiles(p, conf).minByOption(_.getPath.toString)
+      else Some(root)
+    first.map(f => new Footer(f.getPath, ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)))
+  }
+
+  private def geoOf(footer: Footer): Option[GeoParquetMetadata] =
+    Option(footer.getParquetMetadata.getFileMetaData.getKeyValueMetaData
+      .get(GeoParquetMetadata.FooterKey))
+      .map(GeoParquetMetadata.fromJson)
 
   /** Rewrite one parquet file with the `geo` footer key added (runs on an
     * executor; local Configuration suffices for file/hdfs URIs it carries).
@@ -281,59 +315,49 @@ object GeoParquet {
   }
 
   /** Read a GeoParquet dataset; geometry columns keep their WKB binary form
-    * and gain Spark column Metadata with encoding + CRS.
+    * and gain Spark column Metadata with encoding + CRS. The schema comes
+    * from the first part file's footer, read once together with the `geo`
+    * key, so no schema-inference job runs; with
+    * `spark.sql.parquet.mergeSchema` on (or no part file found) Spark's
+    * inference supplies it instead.
     */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
-    readMetadata(spark, path) match {
-      case None => df
-      case Some(geo) =>
-        val withMeta = geo.columns.foldLeft(df) { case (d, (name, cm)) =>
-          if (!d.columns.contains(name)) d
-          else {
-            val mb = new MetadataBuilder()
-              .putString(MetaKeyEncoding, cm.encoding)
-              .putString(MetaKeyCrs, cm.crs)
-            // only a covering column that actually exists may prune
-            cm.covering.filter(d.columns.contains)
-              .foreach(mb.putString(MetaKeyCovering, _))
-            d.withMetadata(name, mb.build())
-          }
-        }
-        // NOTE: covering columns are per-geometry-column (`__bbox_<col>`,
-        // written by `write(addBboxColumn = true)`); SpatialFilterRule
-        // resolves them by name against the attribute a predicate tests. A
-        // pre-multi-covering dataset carrying a bare `__bbox` column gets
-        // no automatic pruning (an alias-rename here would sit in a Project
-        // the optimizer prunes away before the rule runs) — rewrite such
-        // datasets once with the current writer. Silent pruning loss is a
-        // scale surprise, so surface it once per JVM at read time.
-        if (df.columns.contains("__bbox") && legacyBboxWarned.compareAndSet(false, true))
-          log.warn(s"GeoParquet dataset at $path carries a legacy bare '__bbox' covering " +
-            "column; spatial row-group pruning now binds per-column '__bbox_<col>' names " +
-            "and will NOT use it. Rewrite the dataset once with GeoParquet.write(..., " +
-            "addBboxColumn = true) to restore pruning.")
-        withMeta
-    }
+    val footer = firstFooter(spark, path)
+    val sqlConf = spark.sessionState.conf
+    val fileSchema = footer.filter(_ => !sqlConf.isParquetSchemaMergingEnabled)
+      .map(ParquetFileFormat.readSchemaFromFooter(_, new ParquetToSparkSchemaConverter(sqlConf)))
+      .getOrElse(spark.read.parquet(path).schema)
+    val geo = footer.flatMap(geoOf)
+    val names = fileSchema.fieldNames.toSet
+    val schema = StructType(fileSchema.map { f =>
+      geo.flatMap(_.columns.get(f.name)).fold(f) { cm =>
+        val mb = new MetadataBuilder()
+          .putString(MetaKeyEncoding, cm.encoding)
+          .putString(MetaKeyCrs, cm.crs)
+        // only a covering column that actually exists may prune
+        cm.covering.filter(names).foreach(mb.putString(MetaKeyCovering, _))
+        f.copy(metadata = mb.build())
+      }
+    })
+    // NOTE: covering columns are per-geometry-column (`__bbox_<col>`,
+    // written by `write(addBboxColumn = true)`); SpatialFilterRule
+    // resolves them by name against the attribute a predicate tests. A
+    // pre-multi-covering dataset carrying a bare `__bbox` column gets
+    // no automatic pruning (an alias-rename here would sit in a Project
+    // the optimizer prunes away before the rule runs) — rewrite such
+    // datasets once with the current writer. Silent pruning loss is a
+    // scale surprise, so surface it once per JVM at read time.
+    if (geo.isDefined && names("__bbox") && legacyBboxWarned.compareAndSet(false, true))
+      log.warn(s"GeoParquet dataset at $path carries a legacy bare '__bbox' covering " +
+        "column; spatial row-group pruning now binds per-column '__bbox_<col>' names " +
+        "and will NOT use it. Rewrite the dataset once with GeoParquet.write(..., " +
+        "addBboxColumn = true) to restore pruning.")
+    spark.read.schema(schema).parquet(path)
   }
 
   /** Decode the `geo` footer metadata of a dataset (first part file). */
-  def readMetadata(spark: SparkSession, path: String): Option[GeoParquetMetadata] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val first = (if (fs.getFileStatus(p).isDirectory)
-      listParquetFiles(p, conf).sorted.headOption.map(new Path(_))
-    else Some(p))
-    first.flatMap { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      try {
-        Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
-          .get(GeoParquetMetadata.FooterKey))
-          .map(GeoParquetMetadata.fromJson)
-      } finally reader.close()
-    }
-  }
+  def readMetadata(spark: SparkSession, path: String): Option[GeoParquetMetadata] =
+    firstFooter(spark, path).flatMap(geoOf)
 
   /** `df.writeGeoParquet(path, "geometry")` / `GeoParquet.read` sugar. */
   implicit class GeoDataFrameOps(private val df: DataFrame) extends AnyVal {

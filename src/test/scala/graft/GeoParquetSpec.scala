@@ -2,6 +2,7 @@ package graft
 
 import graft.geo.{GeoColumnMeta, GeoParquet, GeoParquetMetadata}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, Metadata, StringType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A-block unit tier: metadata codec byte-fixture (A3), footer presence,
@@ -166,6 +167,130 @@ class GeoParquetSpec extends AnyFunSuite {
     assert(meta.isDefined && meta.get.primaryColumn === "geometry")
     // data still reads after the byte-level rewrite
     assert(spark.read.parquet(out).count() === 10)
+  }
+
+  private def points(n: Int) = spark.range(n).toDF("id")
+    .select(col("id"), GeoFunctions.st_point(col("id").cast("double"), lit(1.0)).as("geometry"))
+
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  private def stripMetadata(s: StructType): StructType =
+    StructType(s.map(_.copy(metadata = Metadata.empty)))
+
+  test("a stray part file under _temporary/ decides neither footer nor schema") {
+    val out = "/tmp/graft_test/geo_stray"
+    GeoParquet.write(points(10), out, Seq("geometry"))
+    // a differently shaped GeoParquet file, planted where an aborted job
+    // leaves its attempt output; "_temporary" sorts before "part-"
+    val other = "/tmp/graft_test/geo_stray_src"
+    GeoParquet.write(spark.range(3).select(col("id").cast("string").as("name"),
+      GeoFunctions.st_point(lit(5.0), lit(5.0)).as("g2")), other, Seq("g2"), crs = "EPSG:3857")
+    val src = new java.io.File(other).listFiles().filter(_.getName.endsWith(".parquet")).head
+    val stray = java.nio.file.Paths.get(out, "_temporary", "0", "_temporary",
+      "attempt_202610180000_0000_m_000000_0", "part-00000-stray.parquet")
+    java.nio.file.Files.createDirectories(stray.getParent)
+    java.nio.file.Files.copy(src.toPath, stray)
+
+    val meta = GeoParquet.readMetadata(spark, out).get
+    assert(meta.primaryColumn === "geometry")
+    assert(meta.columns("geometry").crs === GeoParquetMetadata.DefaultCrs)
+    val back = GeoParquet.read(spark, out)
+    assert(back.schema.fieldNames.toSeq === Seq("id", "geometry"))
+    assert(back.schema("geometry").metadata.getString("geo.encoding") === "WKB")
+    assert(back.count() === 10)
+  }
+
+  test("mergeSchema on: read returns the merged column set, as spark.read.parquet does") {
+    val out = "/tmp/graft_test/geo_merge"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+    // each append adds a column the other part file lacks, so no single
+    // footer holds the merged schema whichever file sorts first
+    points(5).withColumn("a", lit(1)).write.mode("append").parquet(out)
+    points(5).withColumn("b", lit("x")).write.mode("append").parquet(out)
+    withConf("spark.sql.parquet.mergeSchema", "true") {
+      val merged = spark.read.parquet(out).schema
+      assert(merged.fieldNames.toSet === Set("id", "geometry", "a", "b"))
+      val back = GeoParquet.read(spark, out)
+      assert(stripMetadata(back.schema) === stripMetadata(merged))
+      assert(back.count() === 10)
+    }
+    assert(GeoParquet.read(spark, out).schema.fieldNames.length === 3)
+  }
+
+  test("read schema equals spark.read.parquet's: plain, covering, partitioned, foreign writer") {
+    def assertParity(p: String): StructType = {
+      val s = GeoParquet.read(spark, p).schema
+      assert(stripMetadata(s) === stripMetadata(spark.read.parquet(p).schema), p)
+      s
+    }
+    val plain = "/tmp/graft_test/geo_parity_plain"
+    GeoParquet.write(points(20).repartition(3), plain, Seq("geometry"))
+    assertParity(plain)
+    val covered = "/tmp/graft_test/geo_parity_covering"
+    GeoParquet.write(points(20), covered, Seq("geometry"), addBboxColumn = true)
+    assertParity(covered)
+    val parted = "/tmp/graft_test/geo_parity_part"
+    GeoParquet.write(points(20).withColumn("bucket", col("id") % 4), parted,
+      Seq("geometry"), partitionBy = Seq("bucket"))
+    assert(assertParity(parted).fieldNames.last === "bucket")
+
+    // parquet-java's example writer: no Spark row-metadata key, and `raw`
+    // is a binary column without a STRING annotation
+    val foreign = "/tmp/graft_test/geo_parity_foreign"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(foreign))
+    val mt = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 id; optional binary raw; optional binary name (STRING); }")
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$foreign/part-00000.parquet"),
+        spark.sparkContext.hadoopConfiguration))
+      .withType(mt).build()
+    try {
+      val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(mt)
+      (0 until 3).foreach { i =>
+        writer.write(groups.newGroup().append("id", i.toLong).append("raw", s"r$i").append("name", s"n$i"))
+      }
+    } finally writer.close()
+    Seq("true" -> StringType, "false" -> BinaryType).foreach { case (asString, rawType) =>
+      withConf("spark.sql.parquet.binaryAsString", asString) {
+        assert(assertParity(foreign)("raw").dataType === rawType)
+        assert(GeoParquet.read(spark, foreign).count() === 3)
+      }
+    }
+  }
+
+  test("read starts no Spark job on a multi-file dataset") {
+    val out = "/tmp/graft_test/geo_nojob"
+    GeoParquet.write(points(64).repartition(4), out, Seq("geometry"))
+    assert(new java.io.File(out).listFiles().count(_.getName.endsWith(".parquet")) >= 2)
+    val sc = spark.sparkContext
+    val key = "graft.test.phase"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty(key))).foreach(started.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "read")
+      val df = GeoParquet.read(spark, out)
+      // the listener bus delivers events in order: once the fence job's
+      // start is seen, every job the read started has been seen as well
+      sc.setLocalProperty(key, "fence")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!started.contains("fence") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(started.contains("fence"), "listener bus did not drain")
+      assert(started.toArray.count(_ == "read") === 0)
+      assert(df.count() === 64)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("footer rewrite preserves row-group statistics pushdown") {
