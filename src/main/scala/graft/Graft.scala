@@ -43,9 +43,7 @@ object Graft {
   def readGeoParquet(spark: SparkSession, path: String): DataFrame =
     geo.GeoParquet.read(spark, path)
 
-  /** Reference-parity entry point: `gdf.to_geoparquet(path)` — also
-    * available as `df.writeGeoParquet(path)` via GeoParquet.GeoDataFrameOps.
-    */
+  /** Reference-parity entry point: `gdf.to_geoparquet(path)`. */
   def writeGeoParquet(df: DataFrame, path: String,
       geometryColumn: String = "geometry"): Unit =
     geo.GeoParquet.write(df, path, Seq(geometryColumn))

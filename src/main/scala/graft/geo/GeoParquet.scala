@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
@@ -15,15 +15,15 @@ import org.apache.spark.sql.types.{MetadataBuilder, StructType}
 /** GeoParquet I/O (SURVEY.md §2 A1/A2): parquet files whose footer carries
   * the `geo` JSON metadata and whose geometry columns are WKB bytes.
   *
-  * Write path: one column-pruned aggregate over the input computes
-  * per-column geometry types + bbox, then a single parallel write through
-  * `GeoParquetFileFormat` puts the `geo` key in every part-file footer AS
-  * IT IS WRITTEN (SURVEY §7 hard-part 1) — no second I/O pass. For
-  * expensive or nondeterministic input plans, `statsFromWritten = true`
-  * writes first, computes stats from the materialized files (so metadata
-  * always describes the bytes on disk), and retrofits the footer via the
-  * distributed byte-level rewrite (`injectFooterInto` — row-group copy,
-  * no decode/re-encode).
+  * Write path: one parallel write through `GeoParquetFileFormat`, with no
+  * stats pass before it. Each part file's writer folds the geometry types
+  * and bbox of the rows it writes and puts the finished `geo` key in its
+  * own footer AS IT CLOSES (SURVEY §7 hard-part 1), so every footer
+  * describes its own file and the bytes on disk, even for a
+  * nondeterministic input plan. [[readMetadata]] unions the per-file
+  * footers into the dataset's. [[injectFooterInto]] retrofits a footer
+  * onto a dataset another writer made (byte-level row-group copy, no
+  * decode/re-encode).
   *
   * Read path: one listing and one footer open, no Spark job. The first
   * part file's footer (first by path, hidden `_`/`.` names skipped as
@@ -55,8 +55,13 @@ object GeoParquet {
   /** Footer metadata by dataset path, cached for the optimizer: the
     * spatial rule consults this on every plan with a spatial predicate
     * over a file scan, so the footer read must cost one I/O per DATASET,
-    * not per query. Bounded by distinct dataset paths per JVM;
-    * invalidated by the writers ([[write]], [[injectFooterInto]]).
+    * not per query. It is ONE footer, the first part file's, not
+    * [[readMetadata]]'s union: encoding, CRS and the covering name are the
+    * same in every file, but its `bbox` and `geometryTypes` describe that
+    * one file only, so nothing may read them as the dataset's (a
+    * "Point-only" test must use [[readMetadata]]). Bounded by distinct
+    * dataset paths per JVM; invalidated by the writers ([[write]],
+    * [[injectFooterInto]]).
     */
   private val metadataCache =
     new java.util.concurrent.ConcurrentHashMap[String, Option[GeoParquetMetadata]]()
@@ -64,7 +69,7 @@ object GeoParquet {
   private[graft] def cachedMetadata(spark: SparkSession,
       path: String): Option[GeoParquetMetadata] =
     metadataCache.computeIfAbsent(path, p =>
-      try readMetadata(spark, p)
+      try firstFooter(spark, p).flatMap(geoOf)
       catch { case scala.util.control.NonFatal(_) => None })
 
   private def invalidateMetadata(path: String): Unit = {
@@ -82,36 +87,28 @@ object GeoParquet {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
   private val legacyBboxWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
 
-  /** @param statsFromWritten compute stats by re-reading the WRITTEN files
-    *   instead of re-executing the input plan. Default false: the pre-write
-    *   aggregate is a column-pruned pass over the input, the right trade
-    *   when the input is a table scan (pruned re-read < full-output
-    *   rewrite). Set true when the input plan is expensive (stats would
-    *   re-run it) or nondeterministic (pre-write stats could describe a
-    *   different execution than the written bytes — stale-metadata hazard);
-    *   the footer then arrives via the byte-level retrofit pass.
-    */
   /** @param spatialClusterFiles when set, rows are range-partitioned into
     *   this many files by the Z-order (Morton) value of their envelope
     *   midpoint before writing — spatially close rows land in the same
     *   file/row group, so each file's `__bbox_<col>` min/max statistics cover a
     *   TIGHT region and SpatialFilterRule's range predicates skip most row
-    *   groups. Requires pre-write stats (the global envelope quantizes the
-    *   curve).
+    *   groups. The curve is quantized over the first geometry column's
+    *   extent, found by one min/max aggregate before the write; rows the
+    *   write sees outside it (a nondeterministic input) clamp to the edge
+    *   cells, which costs clustering quality only — footers come from the
+    *   written rows.
     */
   def write(
       df: DataFrame,
       path: String,
       geometryColumns: Seq[String],
       crs: String = GeoParquetMetadata.DefaultCrs,
-      computeStats: Boolean = true,
       addBboxColumn: Boolean = false,
       partitionBy: Seq[String] = Nil,
-      statsFromWritten: Boolean = false,
       spatialClusterFiles: Option[Int] = None): Unit = {
     require(geometryColumns.nonEmpty, "at least one geometry column")
-    require(spatialClusterFiles.isEmpty || (computeStats && !statsFromWritten),
-      "spatial clustering needs pre-write stats (computeStats=true, statsFromWritten=false)")
+    require(geometryColumns.forall(df.columns.contains),
+      s"geometry columns ${geometryColumns.mkString(", ")} not all in ${df.columns.mkString(", ")}")
     require(spatialClusterFiles.isEmpty || partitionBy.isEmpty,
       "spatial clustering and partitionBy together multiply to files-per-" +
         "partition-value × cluster files; choose one layout")
@@ -129,81 +126,36 @@ object GeoParquet {
         geometryColumns.foldLeft(df)((d, c) =>
           d.withColumn(s"__bbox_$c", GeoFunctions.stEnvelopeStruct(col(c))))
       else df
+    // the footer template: each part file's writer fills in its own
+    // geometry types and bbox (GeoParquetWriteSupport)
+    val template = GeoParquetMetadata(primaryColumn = geometryColumns.head,
+      columns = geometryColumns.map(c => c -> GeoColumnMeta(crs = crs,
+        // GeoParquet 1.1: declare the covering column we just added, so
+        // readers (ours included) need not rely on the naming convention
+        covering = if (addBboxColumn) Some(s"__bbox_$c") else None)).toMap).toJson
 
-    def statsOf(src: DataFrame): Map[String, GeoColumnMeta] = {
-      val aggs = geometryColumns.flatMap { c =>
-        val env = GeoFunctions.stEnvelopeStruct(col(c))
-        Seq(
-          sort_array(collect_set(GeoFunctions.st_geometrytype(col(c)))).as(s"${c}__types"),
-          min(env.getField("xmin")).as(s"${c}__xmin"),
-          min(env.getField("ymin")).as(s"${c}__ymin"),
-          max(env.getField("xmax")).as(s"${c}__xmax"),
-          max(env.getField("ymax")).as(s"${c}__ymax"))
-      }
-      // column-pruned: only the geometry columns reach the aggregate scan
-      val row = src.select(geometryColumns.map(col): _*)
-        .agg(aggs.head, aggs.tail: _*).collect()(0)
-      geometryColumns.map { c =>
-        // empty / all-null geometry column: min/max are null — omit the
-        // bbox rather than fabricate [0,0,0,0] (getAs[Double] unboxes
-        // null to 0.0)
-        val bbox =
-          if (row.isNullAt(row.fieldIndex(s"${c}__xmin"))) None
-          else Some((row.getAs[Double](s"${c}__xmin"), row.getAs[Double](s"${c}__ymin"),
-            row.getAs[Double](s"${c}__xmax"), row.getAs[Double](s"${c}__ymax")))
-        c -> GeoColumnMeta(
-          geometryTypes = row.getAs[scala.collection.Seq[String]](s"${c}__types").toSeq,
-          crs = crs,
-          bbox = bbox,
-          // GeoParquet 1.1: declare the covering column we just added, so
-          // readers (ours included) need not rely on the naming convention
-          covering = if (addBboxColumn) Some(s"__bbox_$c") else None)
-      }.toMap
+    def save(src: DataFrame): Unit = {
+      val writer = src.write.mode("overwrite").format("geoparquet")
+        .option(GeoParquetFileFormat.FooterOption, template)
+      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer).save(path)
     }
-    def toJson(colMeta: Map[String, GeoColumnMeta]): String =
-      GeoParquetMetadata(primaryColumn = geometryColumns.head, columns = colMeta).toJson
 
-    def save(writer: org.apache.spark.sql.DataFrameWriter[Row]): Unit =
-      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-        .save(path)
-
-    if (computeStats && statsFromWritten) {
-      // write plain, then stats from the materialized bytes + retrofit
-      save(out.write.mode("overwrite").format("parquet"))
-      injectFooterInto(df.sparkSession, path, toJson(statsOf(read(df.sparkSession, path))))
-    } else if (spatialClusterFiles.isDefined) {
-      // Clustered path: the input plan would otherwise execute three times
-      // (stats aggregate, range-partitioner sampling, final write) — and a
-      // nondeterministic plan could then write rows the footer bbox does
-      // not cover. Persist pins ONE materialization for all three.
-      val n = spatialClusterFiles.get
-      val mat = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val colMeta = statsOf(mat)
-        val bbox = colMeta(geometryColumns.head).bbox.getOrElse(
-          throw new IllegalArgumentException(
-            "spatial clustering: geometry column has no bbox (empty/all-null)"))
+    spatialClusterFiles match {
+      case Some(n) =>
         val env = GeoFunctions.stEnvelopeStruct(col(geometryColumns.head))
+        val frame = df.agg(min(env.getField("xmin")), min(env.getField("ymin")),
+          max(env.getField("xmax")), max(env.getField("ymax"))).head()
+        if (frame.isNullAt(0))
+          throw new IllegalArgumentException(
+            "spatial clustering: geometry column has no bbox (empty/all-null)")
         val cx = (env.getField("xmin") + env.getField("xmax")) / 2
         val cy = (env.getField("ymin") + env.getField("ymax")) / 2
-        save(mat.withColumn("__z",
-            graft.functions.ZOrder.zorder(cx, cy, bbox._1, bbox._2, bbox._3, bbox._4))
+        save(out.withColumn("__z", graft.functions.ZOrder.zorder(cx, cy,
+            frame.getDouble(0), frame.getDouble(1), frame.getDouble(2), frame.getDouble(3)))
           .repartitionByRange(n, col("__z"))
           .sortWithinPartitions("__z")
-          .drop("__z")
-          .write.mode("overwrite").format("geoparquet")
-          .option(GeoParquetFileFormat.FooterOption, toJson(colMeta)))
-      } finally mat.unpersist()
-    } else {
-      val colMeta =
-        if (!computeStats) geometryColumns.map(c => c -> GeoColumnMeta(crs = crs,
-          covering = if (addBboxColumn) Some(s"__bbox_$c") else None)).toMap
-        else statsOf(out)
-      // Write-time footer injection: GeoParquetFileFormat's WriteSupport
-      // adds the `geo` key as each part file closes — one parallel write,
-      // no second I/O pass.
-      save(out.write.mode("overwrite").format("geoparquet")
-        .option(GeoParquetFileFormat.FooterOption, toJson(colMeta)))
+          .drop("__z"))
+      case None => save(out)
     }
     invalidateMetadata(path)
   }
@@ -238,20 +190,29 @@ object GeoParquet {
     walk(root)
   }
 
+  /** The dataset's part files sorted by path, or `path` itself when it
+    * is a file.
+    */
+  private def partFiles(conf: Configuration, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
+    val root = p.getFileSystem(conf).getFileStatus(p)
+    if (root.isDirectory) listParquetFiles(p, conf).sortBy(_.getPath.toString)
+    else Seq(root)
+  }
+
+  /** One part file's footer. Row groups are skipped: only the schema and
+    * key-value metadata are used.
+    */
+  private def footerOf(conf: Configuration, f: FileStatus): Footer =
+    new Footer(f.getPath, ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
+
   /** Footer of the dataset's first part file by path — the file Spark's
-    * schema inference reads — or of `path` itself when it is a file.
-    * Row groups are skipped: only the schema and key-value metadata are
-    * used.
+    * schema inference reads.
     */
   private def firstFooter(spark: SparkSession, path: String): Option[Footer] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val root = p.getFileSystem(conf).getFileStatus(p)
-    val first =
-      if (root.isDirectory) listParquetFiles(p, conf).minByOption(_.getPath.toString)
-      else Some(root)
-    first.map(f => new Footer(f.getPath, ParquetFooterReader.readFooter(
-      HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)))
+    partFiles(conf, path).headOption.map(footerOf(conf, _))
   }
 
   private def geoOf(footer: Footer): Option[GeoParquetMetadata] =
@@ -355,14 +316,25 @@ object GeoParquet {
     spark.read.schema(schema).parquet(path)
   }
 
-  /** Decode the `geo` footer metadata of a dataset (first part file). */
-  def readMetadata(spark: SparkSession, path: String): Option[GeoParquetMetadata] =
-    firstFooter(spark, path).flatMap(geoOf)
-
-  /** `df.writeGeoParquet(path, "geometry")` / `GeoParquet.read` sugar. */
-  implicit class GeoDataFrameOps(private val df: DataFrame) extends AnyVal {
-    def writeGeoParquet(path: String, geometryColumn: String = "geometry",
-        crs: String = GeoParquetMetadata.DefaultCrs): Unit =
-      GeoParquet.write(df, path, Seq(geometryColumn), crs)
+  /** The `geo` metadata of a whole dataset: every part file's footer is
+    * opened (one driver-side read each) and their per-file stats unioned —
+    * geometry types as a sorted union, bbox as the union of the files'
+    * defined boxes (None when no file has one). Version, primary column
+    * and each column's encoding, CRS and covering come from the first
+    * footer by path that has a `geo` key. No optimizer path calls this;
+    * [[read]] and the spatial rule open one footer only.
+    */
+  def readMetadata(spark: SparkSession, path: String): Option[GeoParquetMetadata] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val metas = partFiles(conf, path).flatMap(f => geoOf(footerOf(conf, f)))
+    metas.headOption.map { first =>
+      first.copy(columns = first.columns.map { case (name, c) =>
+        val same = metas.flatMap(_.columns.get(name))
+        name -> c.copy(
+          geometryTypes = same.flatMap(_.geometryTypes).distinct.sorted,
+          bbox = same.flatMap(_.bbox).reduceOption((a, b) =>
+            (a._1 min b._1, a._2 min b._2, a._3 max b._3, a._4 max b._4)))
+      })
+    }
   }
 }

@@ -15,28 +15,23 @@ import org.apache.spark.sql.DataFrame
   * (or read a manifest) rather than globbing mid-recovery.
   *
   * Scale note: one directory per micro-batch is the standard streaming
-  * lakehouse layout (compaction happens downstream); stats are computed
-  * per batch over the batch only — bounded work per trigger.
+  * lakehouse layout (compaction happens downstream); footer stats are
+  * computed per part file by its writer — bounded work per trigger.
   */
 object GeoStreamWriter {
 
   /** foreachBatch hook: `.writeStream.foreachBatch(GeoStreamWriter.sink(root, "geometry"))`.
     *
-    * The batch is persisted around the write: the emptiness probe, the
-    * pre-write stats aggregate and the write itself otherwise each
-    * re-execute the batch plan — wasted work, and for a nondeterministic
-    * transform the footer bbox could describe different rows than were
-    * written.
+    * An empty batch writes no directory. Otherwise the batch plan runs
+    * once more, for the write itself: each part file's writer computes
+    * its own footer from the rows it writes, so there is no stats pass to
+    * share a materialization with.
     */
   def sink(root: String, geometryColumn: String,
       crs: String = graft.geo.GeoParquetMetadata.DefaultCrs): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) => {
-      val mat = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        if (!mat.isEmpty)
-          GeoParquet.write(mat, s"$root/batch=$batchId", Seq(geometryColumn), crs = crs)
-      } finally mat.unpersist()
-    }
+    (batch: DataFrame, batchId: Long) =>
+      if (!batch.isEmpty)
+        GeoParquet.write(batch, s"$root/batch=$batchId", Seq(geometryColumn), crs = crs)
 
   /** Read the union of all written batches (plain read keeps pushdown).
     * Throws with a clear message before any batch exists — the parquet

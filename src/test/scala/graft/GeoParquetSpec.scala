@@ -97,9 +97,19 @@ class GeoParquetSpec extends AnyFunSuite {
     val boxes = spark.range(5, 10).toDF("id")
       .select(col("id"), GeoFunctions.st_makebox(lit(20.0), lit(-5.0),
         col("id").cast("double") * 10, lit(5.0)).as("geometry"))
-    GeoParquet.write(pts.unionByName(boxes), out, Seq("geometry"))
+    // header type codes with flag bits: an EWKB point with an SRID, and an
+    // ISO LineString Z (code 1002), named as st_geometrytype names them
+    val ewkb = spark.range(1).select((col("id") + 10).as("id"),
+      GeoFunctions.st_setsrid(GeoFunctions.st_point(lit(1.0), lit(1.0)), lit(4326)).as("geometry"))
+    val lineZ = java.nio.ByteBuffer.allocate(9 + 48).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .put(1.toByte).putInt(1002).putInt(2)
+      .putDouble(1.0).putDouble(1.0).putDouble(7.0).putDouble(2.0).putDouble(2.0).putDouble(7.0)
+      .array()
+    val iso = spark.createDataFrame(Seq((11L, lineZ))).toDF("id", "geometry")
+    GeoParquet.write(pts.unionByName(boxes).unionByName(ewkb).unionByName(iso),
+      out, Seq("geometry"))
     val cm = GeoParquet.readMetadata(spark, out).get.columns("geometry")
-    assert(cm.geometryTypes === Seq("Point", "Polygon")) // sorted
+    assert(cm.geometryTypes === Seq("LineString", "Point", "Polygon")) // sorted
     assert(cm.bbox === Some((0.0, -5.0, 90.0, 5.0)))
   }
 
@@ -111,6 +121,9 @@ class GeoParquetSpec extends AnyFunSuite {
     GeoParquet.write(df, out, Seq("geometry"), partitionBy = Seq("bucket"))
     val meta = GeoParquet.readMetadata(spark, out)
     assert(meta.isDefined && meta.get.primaryColumn === "geometry")
+    // the union over every bucket=<k>/ part file's own footer
+    assert(meta.get.columns("geometry").bbox === Some((0.0, 1.0, 99.0, 1.0)))
+    assert(meta.get.columns("geometry").geometryTypes === Seq("Point"))
     val back = GeoParquet.read(spark, out)
     assert(back.count() === 100)
     assert(back.schema("geometry").metadata.getString("geo.encoding") === "WKB")
@@ -142,18 +155,6 @@ class GeoParquetSpec extends AnyFunSuite {
     }
   }
 
-  test("statsFromWritten: stats come from the materialized files, footer retrofitted") {
-    val out = "/tmp/graft_test/geo_statswritten"
-    val df = spark.range(20).toDF("id")
-      .select(col("id"), GeoFunctions.st_point(col("id").cast("double"),
-        (col("id") * 3).cast("double")).as("geometry"))
-    GeoParquet.write(df, out, Seq("geometry"), statsFromWritten = true)
-    val meta = GeoParquet.readMetadata(spark, out)
-    assert(meta.isDefined)
-    assert(meta.get.columns("geometry").bbox === Some((0.0, 0.0, 19.0, 57.0)))
-    assert(GeoParquet.read(spark, out).count() === 20)
-  }
-
   test("injectFooterInto retrofits a geo footer onto plain parquet") {
     val out = "/tmp/graft_test/geo_retrofit"
     spark.range(10).toDF("id")
@@ -180,6 +181,63 @@ class GeoParquetSpec extends AnyFunSuite {
 
   private def stripMetadata(s: StructType): StructType =
     StructType(s.map(_.copy(metadata = Metadata.empty)))
+
+  private def extentOf(df: org.apache.spark.sql.DataFrame) = {
+    val e = GeoFunctions.stEnvelopeStruct(col("geometry"))
+    val r = df.agg(min(e.getField("xmin")), min(e.getField("ymin")),
+      max(e.getField("xmax")), max(e.getField("ymax"))).head()
+    (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
+  }
+
+  // Fails at a writer that puts the dataset's stats in every file.
+  test("per-file footers: each part file's bbox and types describe its own rows") {
+    val out = "/tmp/graft_test/geo_perfile"
+    withConf("spark.sql.files.maxRecordsPerFile", "7") {
+      GeoParquet.write(points(40).repartition(2), out, Seq("geometry"))
+    }
+    val parts = new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(parts.length > 2, "want tasks that roll over to a second file")
+    parts.foreach { f =>
+      val cm = GeoParquet.readMetadata(spark, f.getPath).get.columns("geometry")
+      val rows = spark.read.parquet(f.getPath)
+      assert(cm.bbox === Some(extentOf(rows)), f.getName)
+      assert(cm.geometryTypes === rows.select(GeoFunctions.st_geometrytype(col("geometry")))
+        .distinct().collect().map(_.getString(0)).sorted.toSeq, f.getName)
+    }
+    assert(GeoParquet.readMetadata(spark, out).get.columns("geometry").bbox ===
+      Some((0.0, 1.0, 39.0, 1.0)))
+  }
+
+  // Fails at a writer whose stats come from a separate execution of the
+  // input plan: the stats job and the write draw different coordinates.
+  test("nondeterministic input: the footer bbox is the extent of the rows written") {
+    val out = "/tmp/graft_test/geo_nondet"
+    val rnd = udf(() => scala.util.Random.nextDouble() * 100).asNondeterministic()
+    val df = spark.range(50).toDF("id")
+      .select(col("id"), GeoFunctions.st_point(rnd(), rnd()).as("geometry"))
+    GeoParquet.write(df, out, Seq("geometry"))
+    assert(GeoParquet.readMetadata(spark, out).get.columns("geometry").bbox ===
+      Some(extentOf(GeoParquet.read(spark, out))))
+  }
+
+  // Passes at a writer with a pre-write stats pass too.
+  test("empty input: the footer names the column, with no types and no bbox") {
+    val out = "/tmp/graft_test/geo_empty"
+    GeoParquet.write(points(0), out, Seq("geometry"))
+    val cm = GeoParquet.readMetadata(spark, out).get.columns("geometry")
+    assert(cm.geometryTypes === Nil)
+    assert(cm.bbox === None)
+    assert(GeoParquet.read(spark, out).count() === 0)
+  }
+
+  // Passes at a writer with a pre-write stats pass too: its JTS parse
+  // rejects the same bytes.
+  test("malformed WKB: the write rejects an unknown geometry type code") {
+    val out = "/tmp/graft_test/geo_malformed"
+    val bad = spark.createDataFrame(Seq((1L, Array[Byte](1, 99, 0, 0, 0))))
+      .toDF("id", "geometry")
+    intercept[Exception](GeoParquet.write(bad, out, Seq("geometry")))
+  }
 
   test("a stray part file under _temporary/ decides neither footer nor schema") {
     val out = "/tmp/graft_test/geo_stray"
