@@ -1,6 +1,6 @@
 #!/bin/bash
 # Run a graft main directly on the compiled classes (no sbt startup/lock).
-# Usage: scripts/run_main.sh graft.OptSweep /root/testdata/sf0.1 [args...]
+# Usage: scripts/run_main.sh graft.Verify <sf_dir> <out_dir> [prefix]
 # Requires a prior `sbt compile`. Honors SPARK_DRIVER_MEM (default 8g).
 set -eu
 cd "$(dirname "$0")/.."

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The committed clustered-embedding corpus behind the driver-gated ANN
-  * recall row (`e28d_ann_recall`) and AnnReport's production-shape tables
-  * (VERDICT r6 item 4): 50 well-separated Gaussian clusters × 40 members
+  * recall row (`e28d_ann_recall`, VERDICT r6 item 4) and the
+  * `e39_semdedup` row: 50 well-separated Gaussian clusters × 40 members
   * in 64 dims — same row count and dim as the sf0.1 embeddings table, but
   * with the structure real embedding spaces have (within-cluster cosine
   * ≈ 0.999, cross-cluster near 0), so "the true top-10" is an unambiguous
@@ -26,7 +26,7 @@ object ClusteredFixture {
 
   /** (vec_id, embedding); vec_id = cluster * members + m. Generation
     * order (all centers first, then members cluster-major) matches the
-    * committed file and the r6 AnnReport corpus.
+    * committed file.
     */
   def vectors: Array[(Long, Array[Float])] = {
     val rnd = new scala.util.Random(20260813L)

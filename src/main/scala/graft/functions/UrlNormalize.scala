@@ -131,7 +131,7 @@ object UrlNormalize {
       val close = hostPort.lastIndexOf(']')
       val colon = hostPort.indexOf(':', if (close < 0) 0 else close + 1)
       var host = if (colon < 0) hostPort else hostPort.substring(0, colon)
-      var port = if (colon < 0) "" else hostPort.substring(colon + 1)
+      val port = if (colon < 0) "" else hostPort.substring(colon + 1)
       host = host.toLowerCase(java.util.Locale.ROOT)
       if (port.isEmpty || defaultPorts.get(schemeLc).contains(port))
         hostPort = host

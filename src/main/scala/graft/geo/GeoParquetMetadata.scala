@@ -1,7 +1,6 @@
 package graft.geo
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.ObjectNode
+import com.fasterxml.jackson.databind.ObjectMapper
 import scala.jdk.CollectionConverters._
 
 /** The GeoParquet `geo` footer metadata (SURVEY.md §2 A3).

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.TextFunctions.splitmix64
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Approximate nearest neighbour via random-hyperplane LSH (SURVEY.md §2

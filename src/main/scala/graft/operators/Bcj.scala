@@ -237,7 +237,7 @@ object Bcj {
       val b1 = buf(i + 1) & 0xff
       if ((b0 == 0x40 && (b1 & 0xc0) == 0x00) ||
         (b0 == 0x7f && (b1 & 0xc0) == 0xc0)) {
-        var src = ((b0 << 24) | (b1 << 16) | ((buf(i + 2) & 0xff) << 8) |
+        val src = ((b0 << 24) | (b1 << 16) | ((buf(i + 2) & 0xff) << 8) |
           (buf(i + 3) & 0xff)) << 2
         var dest = if (encode) src + i else src - i
         dest = dest >>> 2

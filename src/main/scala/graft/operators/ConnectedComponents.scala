@@ -113,12 +113,13 @@ object ConnectedComponents {
   // too: smallStar's per-group minimum is duplicate-insensitive and the
   // round's final distinct canonicalizes, so each round's edge SET — and
   // therefore the convergence round and the final labels — is unchanged
-  // (CC spec pins union-find equivalence; CcPlan A/Bs the full legacy loop
-  // against this one on the real e18 edges; e18/e64 oracles pin the
-  // end-to-end labels). 6 exchanges/round → 3. The window buffers one
-  // vertex's neighbor rows per group (spillable array) — unlike a
-  // collect_list fusion it never builds a single giant row for a hot
-  // vertex.
+  // (CC spec pins union-find equivalence; e18/e64 oracles pin the
+  // end-to-end labels; the legacy loop's A/B against this one on the real
+  // e18 edges, 5.65–7.53 s → 1.91–3.48 s, is in OPTIMIZATION_r19.md and
+  // ran in src/main/scala/graft/CcPlan.scala at commit 94bd873).
+  // 6 exchanges/round → 3. The window buffers one vertex's neighbor rows
+  // per group (spillable array) — unlike a collect_list fusion it never
+  // builds a single giant row for a hot vertex.
   private val byA =
     org.apache.spark.sql.expressions.Window.partitionBy(col("a"))
 

@@ -29,6 +29,10 @@ object LineDedup {
     * a periodically-recomputed static artifact that incremental/streaming
     * cleaning (d17) joins against — the df table LAGS the stream, exactly
     * as CCNet's hash tables do.
+    *
+    * Precondition: `doc_id` is unique per input row. df is `count(*)`
+    * over each row's `array_distinct` lines, so two rows sharing a
+    * `doc_id` count that document twice and inflate its lines' df.
     */
   def lineDf(docs: DataFrame): DataFrame = withLinesOf(docs)
     // r19 (guide §2.3): the per-document dedup happens SCAN-LOCALLY — a
@@ -40,7 +44,8 @@ object LineDedup {
     .groupBy("line")
     .agg(count(lit(1)).as("df"))
 
-  /** @param docs (doc_id, content) where content is '\n'-separated text;
+  /** @param docs (doc_id, content) where content is '\n'-separated text
+    *             and `doc_id` is unique per row (see [[lineDf]]);
     *             a NULL content row yields (n_lines 0, n_kept 0, "") rather
     *             than legacy size(NULL) = -1 nonsense
     * @return (doc_id, n_lines, n_kept, cleaned) — unordered; callers sort

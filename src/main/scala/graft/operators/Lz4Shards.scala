@@ -188,7 +188,7 @@ object Lz4Shards {
     hdr.write(flg)
     hdr.write(4 << 4) // BD: 64 KB block max
     if (contentSize) {
-      var v = payload.length.toLong
+      val v = payload.length.toLong
       var i = 0
       while (i < 8) { hdr.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 }
     }

@@ -822,7 +822,7 @@ object Multimodal {
       if (eos) return -1
       if (n == 0) {
         if (pos >= b.length) { eos = true; return -1 }
-        var v = b(pos) & 0xff
+        val v = b(pos) & 0xff
         pos += 1
         if (v == 0xff) {
           val nxt = if (pos < b.length) b(pos) & 0xff else -1

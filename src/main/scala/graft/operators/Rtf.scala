@@ -213,7 +213,7 @@ object Rtf {
     * bookmark comment.
     */
   def makeRtf(paras: Seq[String]): Array[Byte] = {
-    val body = paras.zipWithIndex.map { case (p, pi) =>
+    val body = paras.map { p =>
       val sb = new StringBuilder
       p.zipWithIndex.foreach { case (ch, k) =>
         if (ch > 127) {

@@ -38,7 +38,7 @@ object StreamPack {
     val buf = scala.collection.mutable.ArrayBuffer[String]()
     buf ++= carry.rest
     var next = carry.next
-    var emitted = List.newBuilder[(String, Long, String)]
+    val emitted = List.newBuilder[(String, Long, String)]
     // buffer + sort: bounded by this trigger's arrivals for this key
     rows.toSeq.sortBy(_._1).foreach { case (_, _, text) =>
       buf ++= text.split(" ")

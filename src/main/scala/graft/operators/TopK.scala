@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Bounded top-k aggregator (SURVEY.md §2 C36, §4.3 KNN batching).

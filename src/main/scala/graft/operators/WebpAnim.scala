@@ -134,7 +134,6 @@ object WebpAnim {
       frames: Seq[(Int, Int, Int, Boolean, Boolean, Array[Byte])]
       /* (x, y, durationMs, dispose, blend, stillWebp) */): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def w24(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff); out.write((v >> 16) & 0xff) }
     def chunk(cc: String, body: Array[Byte]): Unit = {
       out.write(cc.getBytes("ISO-8859-1"))
       var i = 0

@@ -132,7 +132,7 @@ object WebpL {
         while (s < lengths.length) {
           val len = lengths(s)
           if (len > 0) {
-            var c = nextCode(len)
+            val c = nextCode(len)
             nextCode(len) += 1
             // insert MSB-first
             var node = 0

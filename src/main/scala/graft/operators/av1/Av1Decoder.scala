@@ -23,7 +23,6 @@ package graft.operators.av1
   * regenerable via scripts/av1one.py).
   */
 object Av1Decoder {
-  import Av1Consts._
   import Av1Headers.{Bits, Frame, Malformed, Seq => SeqH, Unsupported}
 
   final case class Planes(width: Int, height: Int, bitDepth: Int,
@@ -178,7 +177,7 @@ object Av1Decoder {
   */
 final class Av1FrameDecode(val seq: Av1Headers.Seq, val fh: Av1Headers.Frame) {
   import Av1Consts._
-  import Av1Headers.{Bits, Malformed, Unsupported}
+  import Av1Headers.Malformed
 
   def payload0(p: Array[Byte]): Array[Byte] = p // identity helper
 
@@ -527,7 +526,6 @@ final class Av1FrameDecode(val seq: Av1Headers.Seq, val fh: Av1Headers.Frame) {
     val bw4 = BlockW4(bSize)
     val bh4 = BlockH4(bSize)
     val half = bw4 >> 1
-    val quarter = bw4 >> 2
     val hasRows = r + (bh4 >> 1) < miRowEnd
     val hasCols = c + (bw4 >> 1) < miColEnd
     val sq = bSize // always square here

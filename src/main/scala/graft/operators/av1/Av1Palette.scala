@@ -105,7 +105,7 @@ object Av1Palette {
     val out = new Array[Int](size)
     if (msac.literal(1) == 1) {
       // delta encoding
-      var bits = bd - 4 + msac.literal(2)
+      val bits = bd - 4 + msac.literal(2)
       var c = msac.literal(bd)
       out(0) = c
       var i = 1

@@ -84,7 +84,7 @@ object Av1LoopFilter {
     // thresholds
     val sharpness = fh.lfSharpness
     val shift = if (sharpness > 4) 2 else if (sharpness > 0) 1 else 0
-    var limit0 =
+    val limit0 =
       if (sharpness > 0) math.max(1, math.min(9 - sharpness, lvl >> shift))
       else math.max(1, lvl)
     val blimit0 = 2 * (lvl + 2) + limit0
@@ -291,7 +291,6 @@ object Av1LoopFilter {
   * outside the visible area.
   */
 object Av1Cdef {
-  import Av1Headers.Unsupported
 
   private val Large = 30000
   private val DivTable = Array(0, 840, 420, 280, 210, 168, 140, 120, 105)

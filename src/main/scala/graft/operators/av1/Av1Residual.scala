@@ -7,7 +7,7 @@ package graft.operators.av1
   */
 object Av1Residual {
   import Av1Consts._
-  import Av1Headers.{Malformed, Unsupported}
+  import Av1Headers.Malformed
 
   /** dev drill env (GRAFT_AV1_STATEDUMP="plane,x,y"), cached once so
     * the per-tx check is a null test */
@@ -42,17 +42,6 @@ object Av1Residual {
   private val CtxOvr: Array[Int] = {
     val sd = System.getenv("GRAFT_AV1_CTXOVR")
     if (sd == null) null else sd.split(",").map(_.toInt)
-  }
-
-  /** dev drill env (GRAFT_AV1_DSMAP="neg,pos"): per-unit dc-sign
-    * score contributions (default the spec-symmetric -1/+1) */
-  private val DsMapNeg: Int = {
-    val sd = System.getenv("GRAFT_AV1_DSMAP")
-    if (sd == null) -1 else sd.split(",")(0).toInt
-  }
-  private val DsMapPos: Int = {
-    val sd = System.getenv("GRAFT_AV1_DSMAP")
-    if (sd == null) 1 else sd.split(",")(1).toInt
   }
 
   /** dev drill env (GRAFT_AV1_DSCTX="plane,x,y,ctx"): force the
@@ -381,11 +370,6 @@ object Av1Residual {
         haveLeft, d.bd)
     }
   }
-
-  @inline private def miRowOf(d: Av1FrameDecode, plane: Int, y: Int): Int =
-    if (plane == 0) y >> 2 else (y >> 2) << d.subY
-  @inline private def miColOf(d: Av1FrameDecode, plane: Int, x: Int): Int =
-    if (plane == 0) x >> 2 else (x >> 2) << d.subX
 
   /** filterType = 1 when a neighboring block uses a smooth mode */
   private def getFilterType(d: Av1FrameDecode, plane: Int, miR: Int,

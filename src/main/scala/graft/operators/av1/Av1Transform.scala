@@ -28,7 +28,6 @@ object Av1Transform {
     else if (a <= 192) -cos(a - 128)
     else cos(256 - a)
   }
-  @inline private def sin128(angle: Int): Int = cos128(angle - 64)
 
   // mutable pass state: clamp range for adds
   private final class Ctx(val range: Int) {
@@ -69,14 +68,14 @@ object Av1Transform {
     val e = Array(t(o), t(o + 2), t(o + 4), t(o + 6))
     idct4(e, 0, c)
     // odd part: inputs 1,5,3,7 (bitrev order of odd indices)
-    var x4 = c.hb(cos128(56), t(o + 1), -cos128(8), t(o + 7))
-    var x7 = c.hb(cos128(8), t(o + 1), cos128(56), t(o + 7))
-    var x5 = c.hb(cos128(24), t(o + 5), -cos128(40), t(o + 3))
-    var x6 = c.hb(cos128(40), t(o + 5), cos128(24), t(o + 3))
-    var s4 = c.clamp(x4 + x5)
-    var s5 = c.clamp(x4 - x5)
-    var s6 = c.clamp(-x6 + x7)
-    var s7 = c.clamp(x6 + x7)
+    val x4 = c.hb(cos128(56), t(o + 1), -cos128(8), t(o + 7))
+    val x7 = c.hb(cos128(8), t(o + 1), cos128(56), t(o + 7))
+    val x5 = c.hb(cos128(24), t(o + 5), -cos128(40), t(o + 3))
+    val x6 = c.hb(cos128(40), t(o + 5), cos128(24), t(o + 3))
+    val s4 = c.clamp(x4 + x5)
+    val s5 = c.clamp(x4 - x5)
+    val s6 = c.clamp(-x6 + x7)
+    val s7 = c.clamp(x6 + x7)
     val n5 = c.hb(-cos128(32), s5, cos128(32), s6)
     val n6 = c.hb(cos128(32), s5, cos128(32), s6)
     t(o) = c.clamp(e(0) + s7)
@@ -95,19 +94,19 @@ object Av1Transform {
     idct8(e, 0, c)
     // odd inputs in bitrev order: 1,9,5,13,3,11,7,15
     // stage 2 rotations: pairs (j, 16-j) with angle 64 - 4*j
-    var x8 = c.hb(cos128(60), t(o + 1), -cos128(4), t(o + 15))
-    var x15 = c.hb(cos128(4), t(o + 1), cos128(60), t(o + 15))
-    var x9 = c.hb(cos128(28), t(o + 9), -cos128(36), t(o + 7))
-    var x14 = c.hb(cos128(36), t(o + 9), cos128(28), t(o + 7))
-    var x10 = c.hb(cos128(44), t(o + 5), -cos128(20), t(o + 11))
-    var x13 = c.hb(cos128(20), t(o + 5), cos128(44), t(o + 11))
-    var x11 = c.hb(cos128(12), t(o + 13), -cos128(52), t(o + 3))
-    var x12 = c.hb(cos128(52), t(o + 13), cos128(12), t(o + 3))
+    val x8 = c.hb(cos128(60), t(o + 1), -cos128(4), t(o + 15))
+    val x15 = c.hb(cos128(4), t(o + 1), cos128(60), t(o + 15))
+    val x9 = c.hb(cos128(28), t(o + 9), -cos128(36), t(o + 7))
+    val x14 = c.hb(cos128(36), t(o + 9), cos128(28), t(o + 7))
+    val x10 = c.hb(cos128(44), t(o + 5), -cos128(20), t(o + 11))
+    val x13 = c.hb(cos128(20), t(o + 5), cos128(44), t(o + 11))
+    val x11 = c.hb(cos128(12), t(o + 13), -cos128(52), t(o + 3))
+    val x12 = c.hb(cos128(52), t(o + 13), cos128(12), t(o + 3))
     // stage 3
-    var s8 = c.clamp(x8 + x9); var s9 = c.clamp(x8 - x9)
-    var s10 = c.clamp(-x10 + x11); var s11 = c.clamp(x10 + x11)
-    var s12 = c.clamp(x12 + x13); var s13 = c.clamp(x12 - x13)
-    var s14 = c.clamp(-x14 + x15); var s15 = c.clamp(x14 + x15)
+    val s8 = c.clamp(x8 + x9); val s9 = c.clamp(x8 - x9)
+    val s10 = c.clamp(-x10 + x11); val s11 = c.clamp(x10 + x11)
+    val s12 = c.clamp(x12 + x13); val s13 = c.clamp(x12 - x13)
+    val s14 = c.clamp(-x14 + x15); val s15 = c.clamp(x14 + x15)
     // stage 4
     val n9 = c.hb(-cos128(16), s9, cos128(48), s14)
     val n14 = c.hb(cos128(48), s9, cos128(16), s14)

@@ -126,7 +126,6 @@ object HevcDecoder {
       HevcHeaders.parseSliceHeader(rdr, nalType, sps, pps)
 
     private val log2Ctb = sps.log2CtbSize
-    private val ctbSize = sps.ctbSize
     private val wCtbs = sps.picWidthInCtbs
     private val hCtbs = sps.picHeightInCtbs
     private val alignW = wCtbs << log2Ctb
@@ -745,8 +744,8 @@ object HevcDecoder {
             cabac.decodeBin(base + ctxOff + (v >> ctxShift)) == 1) v += 1
         v
       }
-      var lastXp = lastPrefix(LastX)
-      var lastYp = lastPrefix(LastY)
+      val lastXp = lastPrefix(LastX)
+      val lastYp = lastPrefix(LastY)
       def suffix(prefix: Int): Int =
         if (prefix > 3) {
           val n = (prefix >> 1) - 1

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Graft, QueryBlock, QueryDef, Tables}
+import graft.{QueryBlock, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -927,7 +927,7 @@ object Curation extends QueryBlock {
       writeWebmFixture(s, dir, pre), writeSevenZipFixture(s, dir, pre),
       writeLz4Fixture(s, dir, pre), writeWebpFixture(s, dir, pre),
       writeVp8LossyFixture("st", "webp_lossy_mix"),
-      writeRtfFixture(s, dir), writeOdtFixture(s, dir),
+      writeRtfFixture(s, dir, pre), writeOdtFixture(s, dir, pre),
       writeIcoFixture("ico_mix"), writeAvifHeifFixture("avif_heif_mix"))
     sources.foreach { src =>
       new java.io.File(src).listFiles().foreach { f =>

@@ -2981,8 +2981,8 @@ object LlmPipeline extends QueryBlock {
     // production partial-probe configurations must hold recall@10 ≥ 0.9
     // while scanning ≤ 25% of the corpus — asserted on the committed
     // 50-cluster fixture corpus (graft.ClusteredFixture — the shape real
-    // embedding spaces have; AnnReport's report-only table, promoted to
-    // a correctness gate). 10 query vectors (one per 5th cluster) run
+    // embedding spaces have; NOTES_r6's report-only recall table, promoted
+    // to a correctness gate). 10 query vectors (one per 5th cluster) run
     // BOTH paths — IVF partial probe (nprobe=2/16) and IVF+PQ+rerank
     // (8-byte codes -> ADC shortlist 100 -> exact re-rank) — through the
     // real operators; ground truth is exact cosine top-10 over the full

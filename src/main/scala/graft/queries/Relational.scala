@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Graft, QueryBlock, QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -582,7 +582,8 @@ object Relational extends QueryBlock {
     // 319→141→~105 ms at sf0.1; plan is HashAggregate end-to-end.
     // r9: the prefix pack is the FUSED pack_upper_ascii8 — one byte walk
     // replacing substring+upper+pack (two UTF8String allocations/row); the
-    // composed form stays as Lab's c27_composed for the paired measurement.
+    // paired measurement against the composed form (~3% at sf1, NOTES_r9)
+    // ran in src/main/scala/graft/Lab.scala at commit 94bd873.
     "c27_strings" -> QueryDef(
       (s, dir) =>
         t(s, dir, "documents")

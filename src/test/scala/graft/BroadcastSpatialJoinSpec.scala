@@ -19,7 +19,6 @@ class BroadcastSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("matches the stock join on random boxes (inner semantics, all predicates)") {
-    import spark.implicits._
     val rnd = new scala.util.Random(7)
     def randBoxes(n: Int, g: String, idBase: Long) = boxes(
       (0 until n).map { i =>

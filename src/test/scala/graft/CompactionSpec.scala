@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Canonicalize, Compaction}
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Compaction must change LAYOUT only: fewer files, identical content

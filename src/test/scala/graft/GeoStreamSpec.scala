@@ -12,7 +12,6 @@ class GeoStreamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("streamed points land as GeoParquet batches with footers") {
-    import spark.implicits._
     val srcDir = java.nio.file.Files.createTempDirectory("graft_geostream_src").toString
     val outDir = java.nio.file.Files.createTempDirectory("graft_geostream_out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_geostream_ckpt").toString

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{ImageNearDup, Multimodal}
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** imageAHash64 + ImageNearDup: the hash is checked against an

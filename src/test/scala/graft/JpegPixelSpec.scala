@@ -524,7 +524,7 @@ class JpegPixelSpec extends AnyFunSuite {
     val got422 = Multimodal.jpegPixelStats(b422)
     assert(got422.isDefined && got422.get.nPx === 256L, "4:2:2 must decode")
     var (sr, sg, sb) = (0L, 0L, 0L)
-    mcus422.zipWithIndex.foreach { case (mcu, mi) =>
+    mcus422.foreach { mcu =>
       val planes = mcu.zipWithIndex.map { case (qc, slot) =>
         plane(qc, if (slot < 2) qY else qC)
       }
@@ -542,7 +542,7 @@ class JpegPixelSpec extends AnyFunSuite {
     val got440 = Multimodal.jpegPixelStats(b440)
     assert(got440.isDefined && got440.get.nPx === 256L, "4:4:0 must decode")
     var (tr, tg, tb) = (0L, 0L, 0L)
-    mcus440.zipWithIndex.foreach { case (mcu, mi) =>
+    mcus440.foreach { mcu =>
       val planes = mcu.zipWithIndex.map { case (qc, slot) =>
         plane(qc, if (slot < 2) qY else qC)
       }
@@ -639,7 +639,7 @@ class JpegPixelSpec extends AnyFunSuite {
     val got = Multimodal.jpegPixelStats(bytes)
     assert(got.isDefined && got.get.nComp === 3 && got.get.nPx === 512L, "4:1:1 must decode")
     var (sr, sg, sb) = (0L, 0L, 0L)
-    mcus.zipWithIndex.foreach { case (mcu, mi) =>
+    mcus.foreach { mcu =>
       val planes = mcu.zipWithIndex.map { case (qc, slot) =>
         plane(qc, if (slot < 4) qY else qC)
       }

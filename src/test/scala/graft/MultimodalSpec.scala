@@ -743,7 +743,7 @@ class MultimodalSpec extends AnyFunSuite {
     // 5 windows of 4 samples: |amp| means 100, 600, 700, 100, 600 with
     // threshold 500 -> segments [1..2], [4..4]
     val amps = Seq(100, 600, 700, 100, 600)
-    val samples = amps.zipWithIndex.flatMap { case (a, w) =>
+    val samples = amps.flatMap { a =>
       (0 until 4).map(i => if (i % 2 == 1) -a else a)
     }
     val b = Multimodal.makeWavSamples(8000, samples)

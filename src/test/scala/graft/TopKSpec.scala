@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.TopK
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** C36/E4: bounded top-k aggregator must agree with the window-function

@@ -22,10 +22,6 @@ class WebpAnimSpec extends AnyFunSuite {
       .grouped(2).map(h => Integer.parseInt(h, 16).toByte).toArray
   }
 
-  private def sha256(b: Array[Byte]): String =
-    java.security.MessageDigest.getInstance("SHA-256").digest(b)
-      .map(x => f"${x & 0xff}%02x").mkString
-
   private val members = Seq(
     golden("checker_16x16_q50"),   // bare VP8
     golden("alpha_checker_q30"),   // ALPH + VP8 behind VP8X
