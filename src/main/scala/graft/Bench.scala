@@ -453,7 +453,8 @@ object Bench {
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
         sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64m"))
       // scan granularity stays at the 128m default: Lab's in-session
-      // A/B reads mp16 ~9% faster on c14 at sf1 (385.5 vs 422.7 ms —
+      // (src/main/scala/graft/Lab.scala at commit 94bd873) A/B reads
+      // mp16 ~9% faster on c14 at sf1 (385.5 vs 422.7 ms —
       // the single-file 165MB lineitem only splits into 2 tasks at
       // 128m), but a full r17 gate run at 16m DOUBLED the sf10 side
       // (19.6s vs ~10s: ~100 scan tasks per query across the suite).
@@ -569,7 +570,8 @@ object Bench {
     // in the SAME process so it inherits the sf0.1 suite's fully-warmed
     // JVM exactly like the sf1 gate does. Measured standalone on a cold
     // JVM the Spark side reads ~2× slower from JIT alone (this round:
-    // cold SettleSf 4.9× vs in-process 2.0× at sf1 on the same box),
+    // cold SettleSf 4.9× vs in-process 2.0× at sf1 on the same box;
+    // src/main/scala/graft/SettleSf.scala at commit 94bd873),
     // which would fabricate an anti-amortization trend; in-process is
     // the honest apples-to-apples form. No committed DuckDB column
     // exists at sf3 — only the same-window live pairing reports.

@@ -6,7 +6,8 @@ import org.apache.spark.sql.expressions.Aggregator
 /** Dense-bitmap membership/flag aggregate over a BOUNDED integer key
   * domain — the domain-adaptive fast path of the semi/anti-join count
   * (c09 family; promoted from the r9 Lab where it measured ~0.73× the
-  * shipping flag-aggregate at sf1, NOTES_r9 item 6).
+  * shipping flag-aggregate at sf1, NOTES_r9 item 6; the Lab ran in
+  * src/main/scala/graft/Lab.scala at commit 94bd873).
   *
   * Why it wins: the per-key flag aggregate emits one partial row per
   * distinct key per task (~200k rows/task at sf1) into the exchange; the

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 /** Spatial-join routing (SURVEY.md §4.3; the automatic form of
   * operators.SpatialJoin): an inner join whose condition tests a spatial
@@ -54,7 +55,15 @@ import org.apache.spark.sql.functions._
   * verbatim (a tuned deployment pins it to ~ the median envelope extent in
   * the data's coordinate units). When UNSET the rule derives it from the
   * data at rewrite time — a bounded sample (first [[SampleRows]] rows per
-  * side) of envelope extents, combined as
+  * side) of envelope extents. Each side is one `limit(SampleRows)` collect
+  * of its non-null envelopes; the median and max are taken on the driver
+  * (the exact lower median, which is the element `percentile_approx`
+  * picks at these sizes). A `LocalRelation` side (a `createDataFrame` of
+  * a local Seq) folds to a local table scan and costs no job, so a table ⋈
+  * local-query-points join plans with one job. Spark's `take` reads one
+  * partition first and more only while it has fewer than SampleRows rows,
+  * so a side whose first partition is smaller can cost a few more jobs.
+  * The per-side stats are combined as
   * `max(2·max(median_extent per side), max_extent/64, span/4096)`:
   *  - 2·median targets ~1-4 cells per typical row (bounded replication);
   *    per-side medians, larger wins — a region-vs-points dwithin must grid
@@ -75,6 +84,17 @@ import org.apache.spark.sql.functions._
   * still over-replicate, which the max/64 term bounds only to the sampled
   * maximum — documented trade-off of the convenience route (the explicit
   * operators.SpatialJoin takes a caller-chosen cell).
+  *
+  * Bound, not inlined: the cell and every non-null foldable `st_dwithin`
+  * radius enter the rewritten plan (and the sampling query) as
+  * [[BoundParam]]s, which the generated code reads from its reference
+  * array. A literal would be compiled into the Java source as a constant,
+  * so each new radius, and the new cell derived from it, would make new
+  * source and recompile every stage of the join (8 Janino classes per
+  * query); with the values bound, a join that differs only in its radius
+  * reuses the cached classes. A null radius stays a `Literal` (its stats
+  * are degenerate and the join stays unrouted); a per-row radius column
+  * is a column either way.
   *
   * Scope guards:
   *  - inner joins only, the spatial predicate as a TOP-LEVEL conjunct with
@@ -98,8 +118,8 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
 
   val CellConf = "spark.graft.spatialJoin.cell"
 
-  /** Rows sampled per side when deriving the cell size (limit-pushed, so
-    * the stats job reads only the first partitions of each input).
+  /** Rows sampled per side when deriving the cell size (a `limit`, so the
+    * sampling collect reads only the first partitions of each input).
     */
   val SampleRows = 20000
 
@@ -251,13 +271,24 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
   private def refsOnly(e: Expression, side: LogicalPlan): Boolean =
     e.references.nonEmpty && e.references.subsetOf(side.outputSet)
 
+  /** A non-null foldable `e` as a [[BoundParam]] holding its double value,
+    * so the generated code does not change with it; anything else as is
+    * (a null radius stays a `Literal`, a per-row radius stays a column).
+    */
+  private def bind(e: Expression): Expression =
+    if (!e.foldable) e
+    else Cast(e, DoubleType).eval() match {
+      case v: Double => BoundParam(v)
+      case _ => e
+    }
+
   /** Envelope of `g`, expanded by `expand` when present (dwithin route). */
   private def envelopeOf(g: Expression, expand: Option[Expression]): Column = {
     val env = GeoFunctions.stEnvelopeStruct(column(g))
     expand match {
       case None => env
       case Some(e) =>
-        val rad = column(e).cast("double")
+        val rad = column(bind(e)).cast("double")
         struct(
           (env.getField("xmin") - rad).as("xmin"),
           (env.getField("ymin") - rad).as("ymin"),
@@ -267,48 +298,61 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
   }
 
   /** Derive the grid cell from a bounded sample of both sides' envelope
-    * extents (see scaladoc). Medians are taken PER SIDE and the larger one
-    * wins: a dwithin join of expanded regions against raw points must grid
-    * at the region scale, not at the union median (which the point side
-    * would drag to zero, over-replicating the regions).
-    * None = stats too degenerate to route on.
+    * extents (see scaladoc). Each side is sampled by its own collect of at
+    * most [[SampleRows]] rows: a `LocalRelation` side folds to a local
+    * table scan and starts no job. Rows with a null envelope are dropped.
+    * Medians are taken PER SIDE and the larger one wins: a dwithin join of
+    * expanded regions against raw points must grid at the region scale,
+    * not at the union median (which the point side would drag to zero,
+    * over-replicating the regions). The median is the exact lower median
+    * of the sample, the element `percentile_approx(ext, 0.5)` returns at
+    * these sizes. None = stats too degenerate to route on.
     */
   private def deriveCell(spark: SparkSession, l: LogicalPlan, r: LogicalPlan,
       route: Route): Option[Double] = {
-    def extents(p: LogicalPlan, g: Expression, expand: Option[Expression],
-        side: String): DataFrame = {
+    // one row per sampled envelope: ext, xmin, xmax, ymin, ymax
+    def extents(p: LogicalPlan, g: Expression, expand: Option[Expression]): Array[Array[Double]] = {
       val env = envelopeOf(g, expand)
       ofRows(spark, p)
         .limit(SampleRows)
-        .select(lit(side).as("side"),
+        .select(
           greatest(env.getField("xmax") - env.getField("xmin"),
-            env.getField("ymax") - env.getField("ymin")).as("ext"),
-          env.getField("xmin").as("x0"), env.getField("xmax").as("x1"),
-          env.getField("ymin").as("y0"), env.getField("ymax").as("y1"))
+            env.getField("ymax") - env.getField("ymin")),
+          env.getField("xmin"), env.getField("xmax"),
+          env.getField("ymin"), env.getField("ymax"))
+        .collect()
+        .collect { case row if !row.isNullAt(0) => Array.tabulate(5)(row.getDouble) }
     }
-    val rows = extents(l, route.lg, route.lExpand, "l")
-      .unionAll(extents(r, route.rg, route.rExpand, "r"))
-      .groupBy(col("side"))
-      .agg(
-        expr("percentile_approx(ext, 0.5)").as("med"),
-        max(col("ext")).as("mx"),
-        min(col("x0")).as("x0"), max(col("x1")).as("x1"),
-        min(col("y0")).as("y0"), max(col("y1")).as("y1"))
-      .collect()
-    // both sides must contribute non-null envelope stats; otherwise the
-    // inner join is empty-or-degenerate and the stock plan is fine
-    if (rows.length < 2 || rows.exists(_.isNullAt(1))) None
+    val sides = Seq(extents(l, route.lg, route.lExpand), extents(r, route.rg, route.rExpand))
+    // both sides must contribute non-null envelopes; otherwise the inner
+    // join is empty-or-degenerate and the stock plan is fine
+    if (sides.exists(_.isEmpty)) None
     else {
-      val meds = rows.map(_.getDouble(1)); val mxs = rows.map(_.getDouble(2))
-      val span = math.max(
-        rows.map(_.getDouble(4)).max - rows.map(_.getDouble(3)).min,
-        rows.map(_.getDouble(6)).max - rows.map(_.getDouble(5)).min)
-      val fromExtents = Seq(2.0 * meds.max, mxs.max / 64.0).filter(d => d > 0 && d.isFinite)
-      if (fromExtents.nonEmpty) Some(fromExtents.max)
+      def largest(xs: Iterable[Double]): Double = xs.reduce((a, b) => math.max(a, b))
+      def smallest(xs: Iterable[Double]): Double = xs.reduce((a, b) => math.min(a, b))
+      def lowerMedian(xs: Array[Double]): Double = {
+        java.util.Arrays.sort(xs)
+        xs((xs.length - 1) / 2)
+      }
+      val all = sides.flatten
+      def extent(lo: Int, hi: Int) = largest(all.map(_(hi))) - smallest(all.map(_(lo)))
+      val span = math.max(extent(1, 2), extent(3, 4))
+      val fromExtents = Seq(
+        2.0 * largest(sides.map(s => lowerMedian(s.map(_(0))))),
+        largest(all.map(_(0))) / 64.0).filter(d => d > 0 && d.isFinite)
+      if (fromExtents.nonEmpty) Some(largest(fromExtents))
       else if (span > 0 && span.isFinite) Some(span / 4096.0)
       else None
     }
   }
+
+  /** Cell the rule would derive for `join` (its analyzed children and
+    * routed conjunct), bypassing the memo; None when the condition does not
+    * route or the stats are degenerate. For tests.
+    */
+  private[graft] def derivedCell(join: Join): Option[Double] =
+    join.condition.flatMap(harvest(_, join.left, join.right))
+      .flatMap(deriveCell(SparkSession.active, join.left, join.right, _))
 
   /** Derived-cell memo. Every fresh DataFrame over the same join re-runs
     * the optimizer and would re-pay deriveCell's sampling job (a bench
@@ -351,7 +395,7 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
   private def rewrite(j: Join, l: LogicalPlan, r: LogicalPlan,
       route: Route, cond: Expression): LogicalPlan = {
     val spark = SparkSession.active
-    val cell: Double = spark.conf.getOption(CellConf) match {
+    val cellValue: Double = spark.conf.getOption(CellConf) match {
       case Some(v) => v.toDouble
       case None =>
         if (cellMemo.size() > 256) cellMemo.clear()
@@ -361,6 +405,7 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
           case None => return j // degenerate stats: leave the stock plan
         }
     }
+    val cell = column(BoundParam(cellValue))
 
     def prep(p: LogicalPlan, g: Expression, expand: Option[Expression],
         side: String): DataFrame = {
@@ -384,10 +429,13 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
     // lies in exactly one grid cell, so the pair is emitted exactly once
     val refX = floor(greatest(lEnv.getField("xmin"), rEnv.getField("xmin")) / cell).cast("long")
     val refY = floor(greatest(lEnv.getField("ymin"), rEnv.getField("ymin")) / cell).cast("long")
+    val boundCond = cond.transform {
+      case d: graft.functions.StDWithinExpr => d.copy(third = bind(d.third))
+    }
     val joined = lp.join(rp,
       col("__graft_cell_x_l") === col("__graft_cell_x_r") &&
         col("__graft_cell_y_l") === col("__graft_cell_y_r") &&
-        column(cond) &&
+        column(boundCond) &&
         col("__graft_cell_x_l") === refX && col("__graft_cell_y_l") === refY)
       // restore the original join's schema (attribute order AND exprIds)
       .select((j.output.map(a => column(a))): _*)

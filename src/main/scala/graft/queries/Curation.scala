@@ -2353,11 +2353,14 @@ object Curation extends QueryBlock {
         |{"name":"emb","type":{"type":"array","items":"double"}}]}""".stripMargin
     val codecs = Seq(CodecFactory.nullCodec(), CodecFactory.deflateCodec(6),
       CodecFactory.snappyCodec(), CodecFactory.zstandardCodec(3))
+    // a fixed sync marker (the writer draws a random one per file by
+    // default), so the files are the same bytes from run to run
+    val sync = java.util.HexFormat.of().parseHex("9f3c5a0e7d21b4c86e0f93a1d75c2b48")
     ids.grouped(5).zipWithIndex.foreach { case (group, g) =>
       val schema = new ASchema.Parser().parse(schemaJson)
       val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
       w.setCodec(codecs(g % 4))
-      w.create(schema, new java.io.File(f"$aDir/a$g%02d.avro"))
+      w.create(schema, new java.io.FileOutputStream(f"$aDir/a$g%02d.avro"), sync)
       group.foreach { id =>
         val r = new GenericData.Record(schema)
         r.put("doc_id", id)
@@ -3307,7 +3310,8 @@ object Curation extends QueryBlock {
         // iteration's ranks — the unrolled 3-iteration plan re-executed
         // the edges subtree ~7x (linear, not exponential, recompute; the
         // e78 fix's smaller sibling). Measured 1.18 -> 0.75 s at sf0.1
-        // (Lab, equality-checked); all checkpointed tables are
+        // (Lab, equality-checked; src/main/scala/graft/Lab.scala at
+        // commit 94bd873); all checkpointed tables are
         // dimension-scale (one row per host).
         val edges = docs.select(col("source").as("src"),
             concat(lit("src"), col("doc_id") % 7).as("dst"))
@@ -3484,7 +3488,8 @@ object Curation extends QueryBlock {
         // collect. A production multi-stage pipeline materializes stage
         // outputs between passes — this is that, in-session (the query
         // already persist()s `survivors` on the same grounds). Measured
-        // 3.57 -> 1.50 s at sf0.1 (OptSweep, oracle PASS).
+        // 3.57 -> 1.50 s at sf0.1 (OptSweep, oracle PASS;
+        // src/main/scala/graft/OptSweep.scala at commit 94bd873).
         // r19 (VERDICT r18 item 3): lineage-preserving persist was A/B'd
         // here per the verdict's instruction and REJECTED for these
         // corpus-TEXT stages — interleaved same-window pairs read e47 at
@@ -6105,7 +6110,8 @@ object Curation extends QueryBlock {
         // re-executing a1 up to 8x (exponential recompute; 199 jobs).
         // localCheckpoint per half-step makes each compute once — the
         // same per-round materialization ConnectedComponents already
-        // does. Measured 5.86 -> 1.04 s at sf0.1 (Lab, equality-checked);
+        // does. Measured 5.86 -> 1.04 s at sf0.1 (Lab, equality-checked;
+        // src/main/scala/graft/Lab.scala at commit 94bd873);
         // scores are dimension-scale (one row per host), so the
         // checkpointed blocks are tiny at any corpus size.
         val edges = docs.select(col("source").as("src"),

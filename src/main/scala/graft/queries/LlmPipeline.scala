@@ -1098,7 +1098,8 @@ object LlmPipeline extends QueryBlock {
         // then again inside the scoring join). The model is
         // dimension-scale (distinct trigrams), so the checkpointed blocks
         // stay small at any corpus size; the corpus-scale `tris` is NOT
-        // checkpointed. 2.40 -> 1.60 s at sf0.1 (OptSweep).
+        // checkpointed. 2.40 -> 1.60 s at sf0.1 (OptSweep;
+        // src/main/scala/graft/OptSweep.scala at commit 94bd873).
         val model = tris.groupBy(col("tri")).agg(count(lit(1)).as("cnt"))
           .localCheckpoint()
         // the normalizer is ONE exact long, bound as a literal (the e28c
@@ -3018,7 +3019,8 @@ object LlmPipeline extends QueryBlock {
         // intermediate to truncate the plan): the 40-branch union below
         // re-derived the IVF assignment + PQ encode of the corpus inside
         // EVERY branch; checkpoint the encoded index once. Measured
-        // 6.97 -> 2.29 s (Lab, equality-checked). This is the index-build
+        // 6.97 -> 2.29 s (Lab, equality-checked; src/main/scala/graft/
+        // Lab.scala at commit 94bd873). This is the index-build
         // step a production ANN deployment materializes anyway.
         val encoded = graft.operators.ProductQuantizer
           .encode(indexed, "embedding", cb).localCheckpoint()
@@ -3776,7 +3778,8 @@ object LlmPipeline extends QueryBlock {
         // become column reads"). Join-strategy stats now come from AQE's
         // runtime sizes instead of scan estimates — same adaptive
         // behavior, real numbers. Measured 4.58 -> 3.80 s at sf0.1 (Lab,
-        // equality-checked).
+        // equality-checked; src/main/scala/graft/Lab.scala at commit
+        // 94bd873).
         // r19 (VERDICT r18 item 3): lineage-preserving persist was A/B'd
         // here and stays REJECTED for this site — clean-window interleaved
         // pairs read persist at mean 4.32 s vs checkpoint 4.08 s and the

@@ -194,7 +194,8 @@ object Relational extends QueryBlock {
           // overhead on the same shuffle bytes. repartition(k) moves the
           // raw rows through the one exchange and aggregates once,
           // reducer-side (partial+final fuse into one stage with no
-          // barrier). Measured (Lab, AQE on): sf10 6.12 s → 3.99 s (−35%),
+          // barrier). Measured (Lab, AQE on; src/main/scala/graft/Lab.scala
+          // at commit 94bd873): sf10 6.12 s → 3.99 s (−35%),
           // sf1 743 → 670 ms, sf0.1 flat; equality-checked. The same
           // property holds at 100 TB: per-order line counts are bounded,
           // so orderkeys stay ~unique per task and the partial pass can
@@ -253,7 +254,8 @@ object Relational extends QueryBlock {
     // hint comes off and runtime stats pick the join side; the flag
     // aggregate shape (one key-hashed exchange, bounded state) is
     // unchanged.
-    // Perf lineage: eleven Lab variants on record. The fastest at sf1 are
+    // Perf lineage: eleven Lab variants on record (Lab ran in
+    // src/main/scala/graft/Lab.scala at commit 94bd873). The fastest at sf1 are
     // the dense-bitmap aggregates (c09_bitmap_agg/packed, ~0.73× the
     // flag-agg — NOTES_r9 item 6), whose fixed aggregation state scales
     // with the part-key DOMAIN rather than the data: three bitmaps, ONE
@@ -338,7 +340,8 @@ object Relational extends QueryBlock {
     // a 1.5 MB broadcast byte array probed by a bounds-checked index
     // from INSIDE the scan's whole-stage codegen; lookup + notNull
     // filter reproduces the inner join exactly (unique keys). Measured
-    // at sf10 (Lab, AQE on, width 32): 1094 ms → 725 ms, results
+    // at sf10 (Lab, AQE on, width 32; src/main/scala/graft/Lab.scala at
+    // commit 94bd873): 1094 ms → 725 ms, results
     // canon-equal; the r12 candidates — orders-side pre-aggregation
     // (2277 ms) and shuffled-hash o⋈c (1158 ms) — both lose, and the
     // c20_floor probe (identical stage shape, zero rows) reads 765 ms,
@@ -351,7 +354,8 @@ object Relational extends QueryBlock {
     // UnknownPartitioning (the expanded null keys invalidate any child
     // partitioning), so no coalesce placement below the rollup can elide
     // it — measured: the coalesce(1)-fused attempt costs MORE even on
-    // the ddim shape (Lab c20_ddim2 777 ms vs c20_ddim 725 ms).
+    // the ddim shape (Lab c20_ddim2 777 ms vs c20_ddim 725 ms; Lab at
+    // commit 94bd873).
     "c20_rollup" -> QueryDef(
       (s, dir) => {
         val o = t(s, dir, "orders")

@@ -316,7 +316,8 @@ object Relational2 extends QueryBlock {
     // that buffer per group. The array form computes all three points from
     // one buffer (same interpolation arithmetic on the same sorted counts
     // — bit-identical results; oracle unchanged). Measured 3.78 s → ~1.4 s
-    // at sf0.1 (OptSweep).
+    // at sf0.1 (OptSweep; src/main/scala/graft/OptSweep.scala at commit
+    // 94bd873).
     "c17_percentile" -> QueryDef(
       (s, dir) =>
         t(s, dir, "lineitem")

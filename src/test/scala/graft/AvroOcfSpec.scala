@@ -66,6 +66,22 @@ class AvroOcfSpec extends AnyFunSuite {
     }
   }
 
+  test("the e105 avro fixture is byte-identical from run to run") {
+    val ids = Some((240L until 280L).toArray)
+    def digests(): Map[String, String] = {
+      val dir = queries.Curation.writeAvroFixture(TestSpark.spark, "/tmp/graft_test/avro_repeat", ids)
+      new java.io.File(dir).listFiles().map { f =>
+        val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+        assert(AvroOcf.decode(bytes).exists(_.records.length == 5), f.getName)
+        f.getName -> java.util.HexFormat.of().formatHex(
+          java.security.MessageDigest.getInstance("SHA-256").digest(bytes))
+      }.toMap
+    }
+    val first = digests()
+    assert(first.size === 8)
+    assert(digests() === first)
+  }
+
   test("multi-block files (explicit sync boundaries) decode whole and ordered") {
     val bytes = writeDocs(CodecFactory.deflateCodec(3), 50, syncEvery = 7)
     checkDocs(AvroOcf.decode(bytes).get, 50)

@@ -246,6 +246,170 @@ class SpatialJoinRuleSpec extends AnyFunSuite {
     assert(got === stock)
   }
 
+  private def pts(rows: Seq[(Long, Double, Double)], g: String) = {
+    import spark.implicits._
+    rows.toDF("id", "x", "y")
+      .select(col("id"), GeoFunctions.st_point(col("x"), col("y")).as(g))
+  }
+
+  /** Pairs of a two-id-column join, as a set. */
+  private def pairs(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(x => (x.getLong(0), x.getLong(1))).toSet
+
+  /** `n` points on one partition of a non-local (Range) plan. */
+  private def rangePts(n: Int, g: String) =
+    spark.range(0, n, 1, 1).select(col("id"),
+      GeoFunctions.st_point((col("id") % 20).cast("double") * 10.0,
+        (col("id") / 20).cast("long").cast("double") * 10.0).as(g))
+
+  test("st_dwithin radius edge cases: only a non-null foldable radius is bound") {
+    val l = pts(Seq((1L, 0.0, 0.0), (2L, 5000.0, 0.0), (3L, 120.0, 50.0)), "ga")
+    val r = pts(Seq((10L, 100.0, 0.0), (11L, 5050.0, 40.0), (12L, 9999.0, 9999.0)), "gb")
+    def both(rad: org.apache.spark.sql.Column) = {
+      val routed = l.join(r, GeoFunctions.st_dwithin(col("ga"), col("gb"), rad))
+        .select(l("id").as("lid"), r("id").as("rid"))
+      val rh = r.hint("broadcast")
+      val stock = l.join(rh, GeoFunctions.st_dwithin(col("ga"), col("gb"), rad))
+        .select(l("id").as("lid"), rh("id").as("rid"))
+      (routed, stock)
+    }
+    // the radius each st_dwithin of the optimized plan carries
+    def radii(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case d: graft.functions.StDWithinExpr => d.third
+      }))
+    // a null radius: every expanded envelope is null, so the stats are
+    // degenerate and the stock plan answers (nothing is within NULL)
+    val (nullRouted, nullStock) = both(lit(null).cast("double"))
+    assert(pairs(nullRouted) === pairs(nullStock))
+    assert(pairs(nullRouted).isEmpty)
+    assert(radii(nullRouted) ===
+      Seq(org.apache.spark.sql.catalyst.expressions.Literal(null, org.apache.spark.sql.types.DoubleType)))
+    // a computed foldable radius routes and is bound like a literal
+    val (sumRouted, sumStock) = both(lit(3.0) + lit(147.0))
+    val sumPlan = sumRouted.queryExecution.executedPlan.toString
+    assert(!sumPlan.contains("BroadcastNestedLoopJoin"), s"computed radius not routed:\n$sumPlan")
+    assert(pairs(sumRouted) === pairs(sumStock))
+    assert(pairs(sumRouted) === Set((1L, 10L), (2L, 11L), (3L, 10L)))
+    assert(radii(sumRouted) === Seq(graft.plans.BoundParam(150.0)))
+    // a per-row radius column still routes
+    val lr = l.withColumn("rad", (col("id") * 75.0).cast("double"))
+    val colRouted = lr.join(r, GeoFunctions.st_dwithin(col("ga"), col("gb"), col("rad")))
+      .select(lr("id").as("lid"), r("id").as("rid"))
+    val colPlan = colRouted.queryExecution.executedPlan.toString
+    assert(!colPlan.contains("BroadcastNestedLoopJoin"), s"per-row radius not routed:\n$colPlan")
+    assert(radii(colRouted).map(_.references.toSeq.map(_.name)) === Seq(Seq("rad")))
+    val rh = r.hint("broadcast")
+    assert(pairs(colRouted) === pairs(lr.join(rh,
+      GeoFunctions.st_dwithin(col("ga"), col("gb"), col("rad")))
+      .select(lr("id").as("lid"), rh("id").as("rid"))))
+  }
+
+  test("planning a points x LocalRelation st_dwithin join starts exactly one job") {
+    // the LocalRelation side is sampled on the driver; the one-partition
+    // points side costs one collect
+    val q = rangePts(400, "ga").join(pts(Seq((10L, 50.0, 52.0), (11L, 150.0, 90.0)), "gb"),
+      GeoFunctions.st_dwithin(col("ga"), col("gb"), lit(4.321)))
+    val sc = spark.sparkContext
+    val key = "graft.test.phase"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty(key))).foreach(started.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "plan")
+      val plan = q.queryExecution.executedPlan.toString
+      // the listener bus delivers events in order: once the fence job's
+      // start is seen, every job planning started has been seen as well
+      sc.setLocalProperty(key, "fence")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!started.contains("fence") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(started.contains("fence"), "listener bus did not drain")
+      assert(plan.contains("__graft_cell"), s"dwithin not routed:\n$plan")
+      assert(started.toArray.count(_ == "plan") === 1)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    assert(q.count() === 2)
+  }
+
+  gridTest("a routed join that differs only in its radius compiles no new code") {
+    // the radius and the derived cell are read from the reference array,
+    // so the generated source is the same for every value
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val l = rangePts(400, "ga")
+    val r = pts(Seq((10L, 55.0, 55.0), (11L, 150.0, 90.0), (12L, 20.0, 180.0)), "gb")
+    def run(rad: Double): Long = {
+      val q = l.join(r, GeoFunctions.st_dwithin(col("ga"), col("gb"), lit(rad)))
+        .groupBy(r("id")).agg(count(lit(1)))
+      assert(q.queryExecution.executedPlan.toString.contains("__graft_cell"))
+      q.collect().map(_.getLong(1)).sum
+    }
+    run(5.125)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(run(15.25) > 0)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before === 0)
+  }
+
+  gridTest("derived cell equals the percentile_approx cell on points and on boxes") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    // the cell as the union + groupBy + percentile_approx path computed it
+    def aggregated(l: DataFrame, lg: String, rad: Option[Double],
+        r: DataFrame, rg: String): Option[Double] = {
+      def ext(df: DataFrame, g: String, expand: Double, side: String) = {
+        val e = GeoFunctions.stEnvelopeStruct(col(g))
+        val (x0, y0) = (e.getField("xmin") - expand, e.getField("ymin") - expand)
+        val (x1, y1) = (e.getField("xmax") + expand, e.getField("ymax") + expand)
+        df.limit(graft.plans.SpatialJoinRule.SampleRows).select(lit(side).as("side"),
+          greatest(x1 - x0, y1 - y0).as("ext"), x0.as("x0"), x1.as("x1"), y0.as("y0"), y1.as("y1"))
+      }
+      val rows = ext(l, lg, rad.getOrElse(0.0), "l").unionAll(ext(r, rg, 0.0, "r"))
+        .groupBy(col("side"))
+        .agg(expr("percentile_approx(ext, 0.5)"), max(col("ext")),
+          min(col("x0")), max(col("x1")), min(col("y0")), max(col("y1")))
+        .collect()
+      if (rows.length < 2 || rows.exists(_.isNullAt(1))) None
+      else {
+        val span = math.max(rows.map(_.getDouble(4)).reduce(math.max(_, _)) -
+          rows.map(_.getDouble(3)).reduce(math.min(_, _)),
+          rows.map(_.getDouble(6)).reduce(math.max(_, _)) -
+            rows.map(_.getDouble(5)).reduce(math.min(_, _)))
+        val fromExtents = Seq(2.0 * rows.map(_.getDouble(1)).reduce(math.max(_, _)),
+          rows.map(_.getDouble(2)).reduce(math.max(_, _)) / 64.0).filter(d => d > 0 && d.isFinite)
+        if (fromExtents.nonEmpty) Some(fromExtents.reduce(math.max(_, _)))
+        else if (span > 0) Some(span / 4096.0) else None
+      }
+    }
+    def derived(q: DataFrame): Option[Double] =
+      graft.plans.SpatialJoinRule.derivedCell(
+        q.queryExecution.analyzed.collectFirst { case j: Join => j }.get)
+    // points, expanded by a radius and not
+    val pl = rangePts(400, "ga")
+    val pr = pts(Seq((10L, 55.0, 55.0), (11L, 150.0, 90.0), (12L, 20.0, 180.0)), "gb")
+    val dw = derived(pl.join(pr, GeoFunctions.st_dwithin(col("ga"), col("gb"), lit(6.004))))
+    assert(dw.isDefined && dw === aggregated(pl, "ga", Some(6.004), pr, "gb"))
+    val pi = derived(pl.join(pr, GeoFunctions.st_intersects(col("ga"), col("gb"))))
+    assert(pi.isDefined && pi === aggregated(pl, "ga", None, pr, "gb"))
+    // the box fixtures of the tests above
+    val b1 = boxes(Seq((1L, 0.0, 0.0, 1200.0, 700.0), (1L, 0.0, 0.0, 1200.0, 700.0),
+      (2L, 5000.0, 5000.0, 5100.0, 5100.0)), "ga")
+    val b2 = boxes(Seq((10L, 900.0, 600.0, 1600.0, 1300.0), (11L, -400.0, -300.0, 100.0, 50.0),
+      (12L, 9000.0, 9000.0, 9001.0, 9001.0)), "gb")
+    val b3 = boxes(Seq((1L, -179.5, -89.5, -179.0, -89.0), (2L, 0.0, 0.0, 0.5, 0.5),
+      (3L, 179.0, 89.0, 179.5, 89.5)), "ga")
+    val b4 = boxes(Seq((10L, -179.25, -89.25, -178.75, -88.75), (11L, 0.25, 0.25, 0.75, 0.75),
+      (12L, 100.0, 50.0, 100.5, 50.5)), "gb")
+    for ((a, b) <- Seq(b1 -> b2, b3 -> b4, b1 -> b4)) {
+      val c = derived(a.join(b, GeoFunctions.st_intersects(col("ga"), col("gb"))))
+      assert(c.isDefined && c === aggregated(a, "ga", None, b, "gb"))
+    }
+  }
+
   test("cross-side equi key disables the rewrite (hash join already avoids BNL)") {
     val l = boxes(Seq((1L, 0.0, 0.0, 10.0, 10.0)), "ga")
     val r = boxes(Seq((1L, 5.0, 5.0, 15.0, 15.0)), "gb").withColumnRenamed("id", "rid")
