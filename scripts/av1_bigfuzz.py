@@ -6,7 +6,10 @@ big_03 (235x211 12-bit, lf=47) is the banked OPEN deblock-corner class
 (NOTES_r18 ledger — ±1-2 on 62 pixels at the bottom-right crop corner).
 
   python3 scripts/av1_bigfuzz.py > /tmp/final_fuzz.jsonl
-  sbt 'Test/runMain graft.operators.av1.Av1CalMain /tmp/final_fuzz.jsonl'
+
+The r18 reporter that read this corpus, Av1CalMain, is at
+src/test/scala/graft/operators/av1/Av1CalMain.scala at commit 8a34f78;
+the committed big-fuzz members are pinned by Av1Spec.
 """
 import ctypes
 import importlib.util

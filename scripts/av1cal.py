@@ -1,13 +1,16 @@
 #!/usr/bin/env python3
-"""Full-plane AV1 calibration vectors for graft.operators.av1.Av1CalMain.
+"""Full-plane AV1 calibration vectors (reference-decoded planes).
 
 Re-encodes the SAME members as avif_heif_reference.py's sweep /
 palsweep / cdefsweep commands (same PRNG, same options), but emits the
-raw OBU payload plus the REFERENCE decoder's full pixel planes, so the
-Scala side can report first-divergent-pixel per plane:
+raw OBU payload plus the REFERENCE decoder's full pixel planes, so a
+decoder run can be compared pixel by pixel per plane:
 
   python3 scripts/av1cal.py cdefsweep 30 20260816 > /tmp/vecs.jsonl
-  sbt 'Test/runMain graft.operators.av1.Av1CalMain /tmp/vecs.jsonl'
+
+The per-plane divergence reporter that read these lines, Av1CalMain,
+is at src/test/scala/graft/operators/av1/Av1CalMain.scala at commit
+8a34f78; the committed goldens built from them are pinned by Av1Spec.
 
 JSON-lines fields: name, w, h, depth, payload (hex OBU bytes),
 planes (array of hex strings; 8-bit = 1 byte/sample, else u16 LE),

@@ -664,7 +664,7 @@ def cal_members(h, n, seed, params):
 
 def cmd_cal(n, seed, kv, out):
     """Write a JSONL calibration corpus: annexb hex + libde265 planes
-    (hex u8) per member. Consumed by Scala HevcCalMain."""
+    (hex u8) per member. Consumed by HevcSpec."""
     h = load_heif()
     d = load_de265()
     with open(out, "w") as f:

@@ -60,10 +60,6 @@ object Vp8 {
 
   private val MaxPixels = 1 << 24
 
-  // Tolerance-derivation instrumentation for the ran-dry check (see the
-  // decodeFrame comment); hoisted so the hot path pays one boolean.
-  private val VirtDebug = sys.env.contains("GRAFT_VP8_VIRT_DEBUG")
-
   private object Malformed extends RuntimeException {
     override def fillInStackTrace(): Throwable = this
   }
@@ -1171,7 +1167,6 @@ object Vp8 {
       if (parts(dpi).virtualBytes > dryP) dryP = parts(dpi).virtualBytes
       dpi += 1
     }
-    if (VirtDebug) System.err.println(s"VP8VIRT $dryP")
     if (dryP > 2) throw Malformed
 
     // ---- crop ----

@@ -43,13 +43,11 @@ final class Av1CdfCtx(qctx: Int) {
   // libraries; ctx0 recovered FUNCTIONALLY by brute-force pixel-exact
   // sweeps (Av1UvGateBrute over np444/np420: icdf bucket 256..319,
   // matching AOM_CDF2(32461) -> 307); ctx1 likewise via uv-palette
-  // cases (AOM_CDF2(21488) -> 11280 candidate).
+  // cases (AOM_CDF2(21488) -> 11280 candidate). The sweep tool is at
+  // src/test/scala/graft/operators/av1/Av1UvGateBrute.scala at commit
+  // 8a34f78.
   val hasPaletteUV: Array[Array[Int]] =
-    Array(
-      Array(if (Av1CdfCtx.uvGateOverride >= 0) Av1CdfCtx.uvGateOverride
-      else 307, 0),
-      Array(if (Av1CdfCtx.uvGate1Override >= 0) Av1CdfCtx.uvGate1Override
-      else 11280, 0))
+    Array(Array(307, 0), Array(11280, 0))
   val paletteYColor: Array[Array[Int]] = rows("palette_y_color") // [7][5]
   val paletteUVColor: Array[Array[Int]] = rows("palette_uv_color")
   val useFilterIntra: Array[Array[Int]] = rows("use_filter_intra") // [22]
@@ -86,9 +84,10 @@ final class Av1CdfCtx(qctx: Int) {
   val deltaLf: Array[Array[Int]] = Array.fill(5)(uniform4())
 
   // coef cdfs for this q context
-  val txbSkip: Array[Array[Int]] = qrows("txb_skip") // [5 txSzCtx][13]
-  if (Av1CdfCtx.txbSkipOverrideRow >= 0)
-    txbSkip(Av1CdfCtx.txbSkipOverrideRow)(0) = Av1CdfCtx.txbSkipOverrideVal
+  // txb_skip [5 txSzCtx][13]: row values scanned in the r18 64-class
+  // drill (Av1RowScan, at src/test/scala/graft/operators/av1/
+  // Av1RowScan.scala at commit 8a34f78)
+  val txbSkip: Array[Array[Int]] = qrows("txb_skip")
   val eobExtra: Array[Array[Int]] = qrows("eob_extra") // [5][2][9]
   val dcSign: Array[Array[Int]] = qrows("dc_sign") // [2][3]
   val eobPt16: Array[Array[Int]] = qrows("eob_pt_16") // [2 pl][2 ctx]
@@ -101,13 +100,4 @@ final class Av1CdfCtx(qctx: Int) {
   val coeffBaseEob: Array[Array[Int]] = qrows("coeff_base_eob") // [5][2][4]
   val coeffBase: Array[Array[Int]] = qrows("coeff_base") // [5][2][42]
   val coeffBr: Array[Array[Int]] = qrows("coeff_br") // [5][2][21]
-}
-
-object Av1CdfCtx {
-  // dev-time brute-force hooks (see Av1UvGateBrute); -1 = use defaults
-  @volatile var uvGateOverride: Int = -1
-  @volatile var uvGate1Override: Int = -1
-  // dev-time row-value scan hook (r18 64-class drill, Av1RowScan)
-  @volatile var txbSkipOverrideRow: Int = -1
-  @volatile var txbSkipOverrideVal: Int = 0
 }

@@ -28,33 +28,6 @@ object Av1Decoder {
   final case class Planes(width: Int, height: Int, bitDepth: Int,
       subX: Int, subY: Int, monochrome: Boolean, planes: Array[Array[Int]])
 
-  /** Dev-only calibration hook (drill use): given (miRow, miCol, bSize)
-    * of a gathered split_or_* read, return an overriding psplit value,
-    * or -1 to keep the computed one. Never set in production paths. */
-  @volatile private[av1] var psplitOverride: (Int, Int, Int) => Int = null
-
-  /** dev drill env (GRAFT_AV1_TXCTX_OVR="r,c,ctx"): force one block's
-    * tx-depth context (adapted-row audit) */
-  private[av1] val TxCtxOvr: Array[Int] = {
-    val sd = System.getenv("GRAFT_AV1_TXCTX_OVR")
-    if (sd == null) null else sd.split(",").map(_.toInt)
-  }
-
-  /** dev drill env (GRAFT_AV1_TXROW_PATCH="r,c,v0[,v1]"): patch the
-    * tx-depth cdf row content just before one block's read */
-  private[av1] val TxRowPatch: Array[Int] = {
-    val sd = System.getenv("GRAFT_AV1_TXROW_PATCH")
-    if (sd == null) null else sd.split(",").map(_.toInt)
-  }
-
-  /** Dev-only drill hook: called after each block's reconstruction with
-    * (state, miRow, miCol, bSize, filterIntraMode [-1 if unused]). A
-    * harness can overwrite the block's reconstructed pixels with
-    * reference values to test whether the entropy stream is still in
-    * sync downstream (pixel-bug vs desync discriminator). Never set in
-    * production paths. */
-  @volatile private[av1] var blockPatch: (Av1FrameDecode, Int, Int, Int, Int) => Unit = null
-
   /** decode the first frame from a raw OBU stream (AVIF item payload).
     * Returns None on malformed/unsupported input.
     */
@@ -336,9 +309,6 @@ final class Av1FrameDecode(val seq: Av1Headers.Seq, val fh: Av1Headers.Frame) {
   @inline private def dcQ(q: Int): Int = dcQTab(math.max(0, math.min(255, q)))
   @inline private def acQ(q: Int): Int = acQTab(math.max(0, math.min(255, q)))
 
-  val trace: Boolean = System.getenv("GRAFT_AV1_TRACE") != null
-  @inline def tr(msg: => String): Unit = if (trace) println("TR " + msg)
-
   // ---------------- tile decode ----------------
   def decodeTile(buf: Array[Byte], start: Int, end: Int,
       tileNum: Int): Unit = {
@@ -348,7 +318,6 @@ final class Av1FrameDecode(val seq: Av1Headers.Seq, val fh: Av1Headers.Frame) {
     miRowEnd = math.min(fh.tileRowStartSb(tileRow + 1) << sbLog2, miRows)
     miColStart = fh.tileColStartSb(tileCol) << sbLog2
     miColEnd = math.min(fh.tileColStartSb(tileCol + 1) << sbLog2, miCols)
-    tr(s"tile $tileNum bytes=${end - start} mi=[$miRowStart..$miRowEnd)x[$miColStart..$miColEnd) q=${fh.baseQIdx} lossless=${fh.codedLossless} txSel=${fh.txModeSelect} seqCdef=${seq.enableCdef} cdefBits=${fh.cdefBits} cdefStr=${(0 until (1 << fh.cdefBits)).map(i => s"${fh.cdefYPri(i)}/${fh.cdefYSec(i)}/${fh.cdefUVPri(i)}/${fh.cdefUVSec(i)}").mkString(";")} lf=${fh.lfLevel.mkString(",")} scc=${fh.allowScreenContentTools} reducedTx=${fh.reducedTxSet} disableCdfUpd=${fh.disableCdfUpdate} dq=${fh.deltaQPresent} dlf=${fh.deltaLfPresent} txbase=${fh.baseQIdx}")
     msac = new Av1Msac(buf, start, end, !fh.disableCdfUpdate)
     cdf = new Av1CdfCtx(qContext(fh.baseQIdx))
     currentQIndex = fh.baseQIdx
@@ -399,7 +368,6 @@ final class Av1FrameDecode(val seq: Av1Headers.Seq, val fh: Av1Headers.Frame) {
       }
       r += sb4
     }
-    tr(s"tile done msacPos=${msac.consumedPos}")
   }
 
   // ---------------- loop restoration syntax (spec 5.11.57) ----------------
@@ -446,7 +414,6 @@ final class Av1FrameDecode(val seq: Av1Headers.Seq, val fh: Av1Headers.Frame) {
       case _ => rtype = msac.symbol(cdf.restoreSwitchable, 3)
     }
     lrUnitType(pl)(idx) = rtype.toByte
-    tr(s"lr unit pl=$pl ($ur,$uc) type=$rtype")
     if (rtype == 1) {
       var pass = 0
       while (pass < 2) {
@@ -461,7 +428,6 @@ final class Av1FrameDecode(val seq: Av1Headers.Seq, val fh: Av1Headers.Frame) {
         }
         pass += 1
       }
-      tr(s"  wiener=${(0 until 6).map(k => lrWiener(pl)(idx * 6 + k)).mkString(",")}")
     } else if (rtype == 2) {
       val set = msac.literal(4) // SGRPROJ_PARAMS_BITS
       lrSgrSet(pl)(idx) = set.toByte
@@ -480,7 +446,6 @@ final class Av1FrameDecode(val seq: Av1Headers.Seq, val fh: Av1Headers.Frame) {
         refSgrXqd(pl)(i) = v
         i += 1
       }
-      tr(s"  sgr set=$set xqd=${lrSgrXqd(pl)(idx * 2)},${lrSgrXqd(pl)(idx * 2 + 1)}")
     }
   }
 
@@ -547,24 +512,15 @@ final class Av1FrameDecode(val seq: Av1Headers.Seq, val fh: Av1Headers.Frame) {
       val row = cdf.partition(rank * 4 + ctx)
       val nSyms = row.length
       partition = msac.symbol(row, nSyms)
-      tr(s"part r=$r c=$c sq=$bSize ctx=$ctx -> $partition")
     } else if (hasCols) {
       // split_or_horz: bool with gathered "vert alike" probability
-      var psplit = gatherVertAlike(rank, r, c, bSize)
-      if (Av1Decoder.psplitOverride != null &&
-          Av1Decoder.psplitOverride(r, c, bSize) >= 0)
-        psplit = Av1Decoder.psplitOverride(r, c, bSize)
+      val psplit = gatherVertAlike(rank, r, c, bSize)
       partition = if (msac.boolProb(psplit)) PARTITION_SPLIT
       else PARTITION_HORZ
-      tr(s"part r=$r c=$c sq=$bSize split_or_horz psplit=$psplit -> $partition")
     } else if (hasRows) {
-      var psplit = gatherHorzAlike(rank, r, c, bSize)
-      if (Av1Decoder.psplitOverride != null &&
-          Av1Decoder.psplitOverride(r, c, bSize) >= 0)
-        psplit = Av1Decoder.psplitOverride(r, c, bSize)
+      val psplit = gatherHorzAlike(rank, r, c, bSize)
       partition = if (msac.boolProb(psplit)) PARTITION_SPLIT
       else PARTITION_VERT
-      tr(s"part r=$r c=$c sq=$bSize split_or_vert psplit=$psplit -> $partition")
     } else partition = PARTITION_SPLIT
 
     val subSize = partitionSubsize(partition, bSize)
@@ -678,7 +634,6 @@ final class Av1FrameDecode(val seq: Av1Headers.Seq, val fh: Av1Headers.Frame) {
     val skipCtx = (if (availU(r, c) && skips((r - 1) * miCols + c)) 1 else 0) +
       (if (availL(r, c) && skips(r * miCols + c - 1)) 1 else 0)
     val skip = msac.bool(cdf.skip(skipCtx))
-    tr(s"block r=$r c=$c bs=$bSize skipCtx=$skipCtx skip=$skip")
 
     // --- cdef index (spec 5.11.56; per 64x64 unit). cdef_bits == 0
     // still MARKS the unit (index 0, zero bits read) — leaving it -1
@@ -717,7 +672,6 @@ final class Av1FrameDecode(val seq: Av1Headers.Seq, val fh: Av1Headers.Frame) {
     val leftMode =
       if (availL(r, c)) IntraModeContext(yModes(r * miCols + c - 1)) else 0
     val yMode = msac.symbol(cdf.kfYMode(aboveMode * 5 + leftMode), 13)
-    tr(s"  ymode=$yMode ctx=($aboveMode,$leftMode)")
     var angleDeltaY = 0
     if (bSize >= BLOCK_8X8 && isDirectionalMode(yMode))
       angleDeltaY = msac.symbol(cdf.angleDelta(yMode - V_PRED), 7) - 3
@@ -738,7 +692,6 @@ final class Av1FrameDecode(val seq: Av1Headers.Seq, val fh: Av1Headers.Frame) {
       uvMode =
         if (cflAllowed) msac.symbol(cdf.uvModeCfl(yMode), 14)
         else msac.symbol(cdf.uvModeNoCfl(yMode), 13)
-      tr(s"  uvmode=$uvMode cflAllowed=${BlockW4(bSize) * 4 <= 32 && BlockH4(bSize) * 4 <= 32}")
       if (uvMode == UV_CFL_PRED) {
         val signs = msac.symbol(cdf.cflSign(0), 8)
         val signU = (signs + 1) / 3
@@ -753,7 +706,6 @@ final class Av1FrameDecode(val seq: Av1Headers.Seq, val fh: Av1Headers.Frame) {
           val v = msac.symbol(cdf.cflAlpha(ctx), 16) + 1
           cflAlphaV = if (signV == 1) -v else v
         }
-        tr(s"  cfl signs=$signs aU=$cflAlphaU aV=$cflAlphaV")
       } else if (isDirectionalMode(uvMode) && bSize >= BLOCK_8X8) {
         angleDeltaUV = msac.symbol(cdf.angleDelta(uvMode - V_PRED), 7) - 3
       }
@@ -777,7 +729,6 @@ final class Av1FrameDecode(val seq: Av1Headers.Seq, val fh: Av1Headers.Frame) {
           palSizeY = msac.symbol(cdf.paletteYSize(bsizeCtx), 7) + 2
           val cache = Av1Palette.paletteCache(this, 0, r, c)
           palY = Av1Palette.readPalette(this, cache, palSizeY, 1)
-          tr(s"  paletteY size=$palSizeY colors=${palY.mkString(",")}")
         }
       }
       if (hasChroma && uvMode == DC_PRED) {
@@ -787,8 +738,6 @@ final class Av1FrameDecode(val seq: Av1Headers.Seq, val fh: Av1Headers.Frame) {
           val cacheU = Av1Palette.paletteCache(this, 1, r, c)
           palU = Av1Palette.readPalette(this, cacheU, palSizeUV, 0)
           palV = Av1Palette.readPaletteV(this, palSizeUV)
-          tr(s"  paletteUV size=$palSizeUV u=${palU.mkString(",")} " +
-            s"v=${palV.mkString(",")}")
         }
       }
     }
@@ -801,7 +750,6 @@ final class Av1FrameDecode(val seq: Av1Headers.Seq, val fh: Av1Headers.Frame) {
       useFilterIntra = msac.bool(cdf.useFilterIntra(bSize))
       if (useFilterIntra)
         filterIntraMode = msac.symbol(cdf.filterIntraMode, 5)
-      tr(s"  filterIntra=$useFilterIntra mode=$filterIntraMode")
     }
 
     // --- palette tokens (index maps; spec 5.11.49) ---
@@ -876,23 +824,11 @@ final class Av1FrameDecode(val seq: Av1Headers.Seq, val fh: Av1Headers.Frame) {
           if (availU(r, c)) TxW(txSzY((r - 1) * miCols + c)) else 0
         val leftH =
           if (availL(r, c)) TxH(txSzY(r * miCols + c - 1)) else 0
-        var ctx = (if (aboveW >= maxTxWide) 1 else 0) +
+        val ctx = (if (aboveW >= maxTxWide) 1 else 0) +
           (if (leftH >= maxTxHigh) 1 else 0)
-        // dev drill: force the tx-depth ctx of one block (row audit)
-        if (Av1Decoder.TxCtxOvr != null && r == Av1Decoder.TxCtxOvr(0) &&
-          c == Av1Decoder.TxCtxOvr(1)) ctx = Av1Decoder.TxCtxOvr(2)
-        // dev drill: patch the tx-depth row content before one read
-        if (Av1Decoder.TxRowPatch != null && r == Av1Decoder.TxRowPatch(0) &&
-          c == Av1Decoder.TxRowPatch(1)) {
-          val row =
-            if (cat == 0) cdf.txDepthCat0(ctx) else cdf.txDepth((cat - 1) * 3 + ctx)
-          row(0) = Av1Decoder.TxRowPatch(2)
-          if (Av1Decoder.TxRowPatch.length > 3) row(1) = Av1Decoder.TxRowPatch(3)
-        }
         val depth =
           if (cat == 0) msac.symbol(cdf.txDepthCat0(ctx), 2)
           else msac.symbol(cdf.txDepth((cat - 1) * 3 + ctx), 3)
-        tr(s"  txdepth cat=$cat ctx=$ctx depth=$depth")
         var d = 0
         while (d < depth) { txSz = SplitTxSize(txSz); d += 1 }
       }
@@ -940,9 +876,6 @@ final class Av1FrameDecode(val seq: Av1Headers.Seq, val fh: Av1Headers.Frame) {
       angleDeltaUV, cflAlphaU, cflAlphaV, skip, txSz, hasChroma, lossless,
       if (useFilterIntra) filterIntraMode else -1, palSizeY > 0,
       palSizeUV > 0)
-    if (Av1Decoder.blockPatch != null)
-      Av1Decoder.blockPatch(this, r, c, bSize,
-        if (useFilterIntra) filterIntraMode else -1)
   }
 
   private def readDeltaQIndex(bSize: Int, skip: Boolean): Unit = {

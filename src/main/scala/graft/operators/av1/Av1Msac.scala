@@ -20,12 +20,6 @@ final class Av1Msac(buf: Array[Byte], start: Int, end: Int,
   private var cnt: Int = -15
   refill()
 
-  /** dev/trace: bytes taken from the buffer so far (refill high-water) */
-  def consumedPos: Int = pos
-
-  /** dev/trace: full decoder state for the python msac twin */
-  def stateDump: String = s"$dif $rng $cnt $pos"
-
   private def refill(): Unit = {
     var c = 64 - cnt - 24
     var continue = true
@@ -70,28 +64,10 @@ final class Av1Msac(buf: Array[Byte], start: Int, end: Int,
       v = ((r8 * (cdf(ret) >> 6)) >> 1) + 4 * (n - 1 - ret)
       c < v
     }) ()
-    if (MarginTrace) {
-      var marg = Int.MaxValue
-      var k = 0
-      while (k < n - 1) {
-        val b = ((r8 * (cdf(k) >> 6)) >> 1) + 4 * (n - 1 - k)
-        val m = math.abs(c - b)
-        if (m < marg) marg = m
-        k += 1
-      }
-      println(s"MARGIN sym n=$n ret=$ret c=$c rng=$rng margin=$marg pos=$pos cnt=$cnt row=${cdf.mkString(":")} dif=$dif id=${System.identityHashCode(cdf)} lbl=$traceLabel")
-    }
     norm(dif - (v.toLong << 48), u - v)
     if (allowUpdate) update(cdf, ret, n)
     ret
   }
-
-  /** dev drill env: print per-read interval margins (knife-edge hunt) */
-  val MarginTrace: Boolean =
-    System.getenv("GRAFT_AV1_MARGINS") != null
-
-  /** dev drill: call-site label shown in margin traces */
-  var traceLabel: String = "" 
 
   private def update(cdf: Array[Int], sym: Int, n: Int): Unit = {
     val count = cdf(n - 1)
@@ -112,9 +88,6 @@ final class Av1Msac(buf: Array[Byte], start: Int, end: Int,
   def boolProb(f: Int): Boolean = {
     val c = (dif >>> 48).toInt
     val v = (((rng >> 8) * (f >> 6)) >> 1) + 4
-    if (MarginTrace)
-      println(s"MARGIN boolp f=$f ret=${c < v} c=$c rng=$rng " +
-        s"margin=${math.abs(c - v)} pos=$pos cnt=$cnt dif=$dif")
     if (c < v) { norm(dif, v); true }
     else { norm(dif - (v.toLong << 48), rng - v); false }
   }

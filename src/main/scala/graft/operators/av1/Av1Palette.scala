@@ -191,9 +191,6 @@ object Av1Palette {
         val ctx = CtxLookup(hash)
         val sym = msac.symbol(cdf(ctx), size)
         map(i * w + j) = order(sym)
-        if (d.trace && System.getenv("GRAFT_AV1_PALTRACE") != null)
-          println(s"PT ($i,$j) ctx=$ctx sym=$sym -> ${order(sym)} " +
-            s"cdf=${cdf(ctx).mkString(",")}")
         j -= 1
       }
       k += 1

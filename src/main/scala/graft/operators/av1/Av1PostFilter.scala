@@ -13,32 +13,7 @@ object Av1LoopFilter {
 
   def apply(d: Av1FrameDecode): Unit = {
     val fh = d.fh
-    val pre = System.getenv("GRAFT_AV1_PDUMP_PRE")
-    if (pre != null) {
-      val pw = new java.io.PrintWriter(pre)
-      for (pl <- 0 until d.numPlanes) pw.println(d.planes(pl).mkString(","))
-      pw.close()
-    }
     if (fh.deltaLfPresent) throw Unsupported("delta_lf")
-    val lfdump = System.getenv("GRAFT_AV1_LFDUMP")
-    if (lfdump != null) {
-      // dev: dump the full pre-deblock state for the python deblock
-      // mirror (scripts/av1_lf_mirror.py)
-      val pw = new java.io.PrintWriter(lfdump)
-      pw.println(s"${d.miRows} ${d.miCols} ${d.numPlanes} ${d.subX} " +
-        s"${d.subY} ${d.bd} ${fh.lfSharpness} " +
-        s"${if (fh.lfDeltaEnabled) 1 else 0} ${fh.lfRefDeltas(0)}")
-      pw.println(fh.lfLevel.mkString(","))
-      pw.println(d.skips.map(s => if (s) 1 else 0).mkString(","))
-      pw.println(d.txSzY.mkString(","))
-      pw.println(d.txSzUV.mkString(","))
-      pw.println(d.blockOriginR.mkString(","))
-      pw.println(d.blockOriginC.mkString(","))
-      for (pl <- 0 until d.numPlanes)
-        pw.println(d.planes(pl).mkString(","))
-      pw.close()
-    }
-    if (System.getenv("GRAFT_AV1_NODEBLOCK") != null) return
     if (fh.lfLevel(0) == 0 && fh.lfLevel(1) == 0 &&
       fh.lfLevel(2) == 0 && fh.lfLevel(3) == 0) return
 
@@ -316,22 +291,6 @@ object Av1Cdef {
 
   def apply(d: Av1FrameDecode): Unit = {
     val fh = d.fh
-    val pdump = System.getenv("GRAFT_AV1_PDUMP")
-    if (pdump != null) {
-      // dev: dump the padded pre-cdef state for the python cdef mirror
-      val pw = new java.io.PrintWriter(pdump)
-      pw.println(s"${d.miRows} ${d.miCols} ${d.numPlanes} ${d.subX} " +
-        s"${d.subY} ${d.bd} ${fh.cdefDamping} ${fh.cdefBits}")
-      pw.println((0 until (1 << fh.cdefBits)).map(i =>
-        s"${fh.cdefYPri(i)},${fh.cdefYSec(i)},${fh.cdefUVPri(i)}," +
-          s"${fh.cdefUVSec(i)}").mkString(";"))
-      pw.println(d.skips.map(s => if (s) 1 else 0).mkString(","))
-      pw.println(d.cdefIdx.mkString(","))
-      for (pl <- 0 until d.numPlanes)
-        pw.println(d.planes(pl).mkString(","))
-      pw.close()
-    }
-    if (System.getenv("GRAFT_AV1_NOCDEF") != null) return
     if (!d.seq.enableCdef || fh.codedLossless || fh.allowIntrabc) return
     var any = false
     var i = 0

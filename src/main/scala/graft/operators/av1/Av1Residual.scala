@@ -9,63 +9,6 @@ object Av1Residual {
   import Av1Consts._
   import Av1Headers.Malformed
 
-  /** dev drill env (GRAFT_AV1_STATEDUMP="plane,x,y"), cached once so
-    * the per-tx check is a null test */
-  private val StateDumpAt: Array[Int] = {
-    val sd = System.getenv("GRAFT_AV1_STATEDUMP")
-    if (sd == null) null else sd.split(",").map(_.toInt)
-  }
-
-  /** dev drill env (GRAFT_AV1_TXTYPE_OVR="plane,x,y,type"): force the
-    * tx type of one transform block to test mapping hypotheses */
-  private val TxTypeOvr: Array[Int] = {
-    val sd = System.getenv("GRAFT_AV1_TXTYPE_OVR")
-    if (sd == null) null else sd.split(",").map(_.toInt)
-  }
-
-  /** dev drill env (GRAFT_AV1_CBPATCH="plane,x,y,scanC,idx,delta"):
-    * nudge one coeff_base cdf row entry before a chosen read */
-  private val CbPatch: Array[Int] = {
-    val sd = System.getenv("GRAFT_AV1_CBPATCH")
-    if (sd == null) null else sd.split(",").map(_.toInt)
-  }
-
-  private val CbPatch2: Array[Int] = {
-    val sd = System.getenv("GRAFT_AV1_CBPATCH2")
-    if (sd == null) null else sd.split(",").map(_.toInt)
-  }
-
-  /** dev drill env (GRAFT_AV1_CTXOVR="plane,x,y,delta[,minC,maxC]"):
-    * add delta to the computed coeff_base ctx for reads of one tx
-    * (optionally only scan indices minC..maxC) — emulates a reference
-    * whose base-ctx formula differs systematically */
-  private val CtxOvr: Array[Int] = {
-    val sd = System.getenv("GRAFT_AV1_CTXOVR")
-    if (sd == null) null else sd.split(",").map(_.toInt)
-  }
-
-  /** dev drill env (GRAFT_AV1_DSCTX="plane,x,y,ctx"): force the
-    * dc-sign context of one tx's read */
-  private val DsCtx: Array[Int] = {
-    val sd = System.getenv("GRAFT_AV1_DSCTX")
-    if (sd == null) null else sd.split(",").map(_.toInt)
-  }
-
-  /** dev drill env (GRAFT_AV1_DSPATCH="plane,x,y,delta"): nudge the
-    * dc_sign cdf row entry 0 before one tx's dc-sign read */
-  private val DsPatch: Array[Int] = {
-    val sd = System.getenv("GRAFT_AV1_DSPATCH")
-    if (sd == null) null else sd.split(",").map(_.toInt)
-  }
-
-  /** dev drill env (GRAFT_AV1_ROWPATCH="plane,x,y,idx,val[,...]"):
-    * overwrite entries of the tx-type cdf row just before the read at
-    * one tx site — emulates a reference whose adapted row drifted */
-  private val RowPatch: Array[Int] = {
-    val sd = System.getenv("GRAFT_AV1_ROWPATCH")
-    if (sd == null) null else sd.split(",").map(_.toInt)
-  }
-
   /** coeff_base 2D context position offsets (spec Coeff_Base_Ctx_Offset,
     * indexed [min(row,4)][min(col,4)])
     */
@@ -456,33 +399,9 @@ object Av1Residual {
     val w4 = w >> 2
     val h4 = h >> 2
 
-    // dev drill hook: dump the exact msac + adapted-cdf state at a
-    // chosen tx entry so the python twin can continue from here
-    if (StateDumpAt != null) {
-      val parts = StateDumpAt
-      if (plane == parts(0) && x == parts(1) && y == parts(2)) {
-        println("STATEDUMP msac " + msac.stateDump)
-        def dump(nm: String, rows: Array[Array[Int]]): Unit =
-          println(s"STATEDUMP $nm " +
-            rows.map(_.mkString(":")).mkString(";"))
-        dump("txbSkip", cdf.txbSkip)
-        dump("txtpSet2", cdf.txtpSet2)
-        dump("txtpSet1", cdf.txtpSet1)
-        dump("eobPt256", cdf.eobPt256)
-        dump("eobPt128", cdf.eobPt128)
-        dump("eobExtra", cdf.eobExtra)
-        dump("coeffBaseEob", cdf.coeffBaseEob)
-        dump("coeffBase", cdf.coeffBase)
-        dump("coeffBr", cdf.coeffBr)
-        dump("dcSign", cdf.dcSign)
-      }
-    }
-
     // ---- all_zero (txb_skip) ----
     val skipCtx = txbSkipCtx(d, plane, x4, y4, w4, h4, txSz, bSize)
-    if (msac.MarginTrace) msac.traceLabel = s"txbSkip pl=$plane x=$x y=$y"
     val allZero = msac.bool(cdf.txbSkip(txSzCtx * 13 + skipCtx))
-    d.tr(s"  coef pl=$plane x=$x y=$y tx=$txSz skipCtx=$skipCtx allZero=$allZero")
     if (allZero) {
       setCoefCtx(d, plane, x, y, w, h, 0, 0)
       return null
@@ -495,18 +414,6 @@ object Av1Residual {
         val set = intraTxSet(txSz, d.fh.reducedTxSet)
         if (set > 0 && d.currentQIndex > 0) {
           val sqr = TxSizeSqr(txSz)
-          if (RowPatch != null && plane == RowPatch(0) && x == RowPatch(1) &&
-            y == RowPatch(2)) {
-            val row =
-              if (set == 1) cdf.txtpSet1(sqr * 13 + yMode)
-              else cdf.txtpSet2(sqr * 13 + yMode)
-            var i = 3
-            while (i + 1 < RowPatch.length) {
-              row(RowPatch(i)) += RowPatch(i + 1)
-              i += 2
-            }
-          }
-          if (msac.MarginTrace) msac.traceLabel = s"txType pl=$plane x=$x y=$y"
           txType =
             if (set == 1)
               TxSet1(msac.symbol(cdf.txtpSet1(sqr * 13 + yMode), 7))
@@ -524,11 +431,6 @@ object Av1Residual {
             t == ADST_DCT || t == DCT_ADST || t == IDTX)) DCT_DCT
           else t
       }
-    }
-    if (TxTypeOvr != null && plane == TxTypeOvr(0) && x == TxTypeOvr(1) &&
-      y == TxTypeOvr(2)) {
-      d.tr(s"    TXTYPE OVERRIDE $txType -> ${TxTypeOvr(3)}")
-      txType = TxTypeOvr(3)
     }
     val cls = if (lossless) TX_CLASS_2D else txClass(txType)
 
@@ -551,9 +453,7 @@ object Av1Residual {
       case _ => cdf.eobPt1024
     }
     val eobRow = eobTable(ptype * 2 + eobCtx)
-    if (msac.MarginTrace) msac.traceLabel = "eobPt"
     val eobPt = msac.symbol(eobRow, eobRow.length) + 1
-    d.tr(s"    eobPt=$eobPt cls=$cls txType=$txType")
     var eob = if (eobPt < 2) eobPt else (1 << (eobPt - 2)) + 1
     if (eobPt >= 3) {
       val extraBits = eobPt - 2
@@ -581,7 +481,6 @@ object Av1Residual {
       var level = 0
       if (c == eob - 1) {
         val ctx = baseEobCtx(c, bwl, ch)
-        if (msac.MarginTrace) msac.traceLabel = s"baseEob c=$c"
         level = msac.symbol(
           cdf.coeffBaseEob(txpl(txSzCtx, ptype, 5) * 4 + ctx), 3) + 1
       } else {
@@ -590,24 +489,7 @@ object Av1Residual {
         // to a 32x32 coded square but keep their tall/wide base-ctx
         // offsets (the r18 10-bit drill: a 32x64 whole-tx block decoded
         // its (0,3) coefficient with the square table and desynced).
-        var ctx = baseCtx(levels, stride, row, col, pos, cls, w, h)
-        if (CtxOvr != null && plane == CtxOvr(0) && x == CtxOvr(1) &&
-          y == CtxOvr(2) &&
-          (CtxOvr.length < 6 || (c >= CtxOvr(4) && c <= CtxOvr(5))))
-          ctx = math.max(0, math.min(41, ctx + CtxOvr(3)))
-        // dev drill: nudge one coeff_base row entry just before a
-        // chosen read (adapted-row drift emulation)
-        if (CbPatch != null && plane == CbPatch(0) && x == CbPatch(1) &&
-          y == CbPatch(2) && c == CbPatch(3)) {
-          val rw = cdf.coeffBase(txpl(txSzCtx, ptype, 5) * 42 + ctx)
-          rw(CbPatch(4)) += CbPatch(5)
-        }
-        if (CbPatch2 != null && plane == CbPatch2(0) && x == CbPatch2(1) &&
-          y == CbPatch2(2) && c == CbPatch2(3)) {
-          val rw = cdf.coeffBase(txpl(txSzCtx, ptype, 5) * 42 + ctx)
-          rw(CbPatch2(4)) += CbPatch2(5)
-        }
-        if (msac.MarginTrace) msac.traceLabel = s"base c=$c ctx=$ctx"
+        val ctx = baseCtx(levels, stride, row, col, pos, cls, w, h)
         level = msac.symbol(
           cdf.coeffBase(txpl(txSzCtx, ptype, 5) * 42 + ctx), 4)
       }
@@ -617,7 +499,6 @@ object Av1Residual {
         var done = false
         while (idx < 4 && !done) {
           val ctx = brCtx(levels, stride, row, col, pos, cls)
-          if (msac.MarginTrace) msac.traceLabel = s"br c=$c ctx=$ctx"
           val k = msac.symbol(
             cdf.coeffBr(txpl(brTxCtx, ptype, 5) * 21 + ctx), 4)
           level += k
@@ -652,13 +533,7 @@ object Av1Residual {
       if (level != 0) {
         var neg = false
         if (c == 0) {
-          var ctx = dcSignCtx(d, plane, x4, y4, w4, h4)
-          // dev drill: force one tx's dc-sign ctx
-          if (DsCtx != null && plane == DsCtx(0) && x == DsCtx(1) &&
-            y == DsCtx(2)) ctx = DsCtx(3)
-          // dev drill: nudge the dc_sign row before one tx's read
-          if (DsPatch != null && plane == DsPatch(0) && x == DsPatch(1) &&
-            y == DsPatch(2)) cdf.dcSign(ptype * 3 + ctx)(0) += DsPatch(3)
+          val ctx = dcSignCtx(d, plane, x4, y4, w4, h4)
           neg = msac.bool(cdf.dcSign(ptype * 3 + ctx))
         } else neg = msac.literal(1) == 1
         if (level > 14) level += msac.golomb()
@@ -677,13 +552,9 @@ object Av1Residual {
     }
     culLevel = math.min(63, culLevel)
 
-    d.tr(s"    eob=$eob dq=[${out.take(16).mkString(",")}]")
-    if (d.trace && System.getenv("GRAFT_AV1_DUMPDQ") != null)
-      println("DQFULL " + out.mkString(","))
     // ---- inverse transform ----
     if (lossless) Av1Transform.iwht4x4(out)
     else Av1Transform.inverse2d(out, txSz, txType, d.bd)
-    d.tr(s"    resid00=${out(0)}")
 
     setCoefCtx(d, plane, x, y, w, h, culLevel, dcCat)
     out

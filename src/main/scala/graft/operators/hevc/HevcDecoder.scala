@@ -26,12 +26,6 @@ object HevcDecoder {
       subX: Int, subY: Int, monochrome: Boolean,
       planes: Array[Array[Int]])
 
-  /** Dev-only calibration hook: called after each TU reconstruction
-    * with (cIdx, x, y, size, mode, cbf, plane, stride). Never set in
-    * production paths. */
-  @volatile private[hevc] var onTu:
-      (Int, Int, Int, Int, Int, Boolean, Array[Int], Int) => Unit = null
-
   /** Decode an annex-B elementary stream (first coded picture). */
   def decode(annexB: Array[Byte]): Option[Planes] =
     try Some(decodeOrThrow(annexB))
@@ -173,8 +167,6 @@ object HevcDecoder {
     private var qgX = 0
     private var qgY = 0
     private val log2QgSize = log2Ctb - pps.diffCuQpDeltaDepth
-
-    private val traceQp = sys.env.contains("GRAFT_HEVCCAL_QP")
 
     // current CU state
     private var cuQp = sh.sliceQp
@@ -484,9 +476,6 @@ object HevcDecoder {
       ensureCuQp()
       fillGrid(qpGrid, x0, y0, size, cuQp.toByte)
       lastCuQp = cuQp
-      if (traceQp)
-        println(s"[hevccal] QP cu($x0,$y0)x$size qp=$cuQp " +
-          s"delta=$cuQpDeltaVal pred=$cuPredPrepared prev=$qpPrev")
     }
 
     private def sameCtb(x1: Int, y1: Int, x2: Int, y2: Int): Boolean =
@@ -641,8 +630,6 @@ object HevcDecoder {
         addResidual(luma, alignW, x0, y0, size, res)
       }
       markDecoded(x0, y0, size)
-      if (onTu != null)
-        onTu(0, x0, y0, size, mode, cbfLuma, luma, alignW)
       // chroma
       if (chromaHere) {
         val cLog2 = if (log2Size > 2) log2Size - 1 else 2
@@ -665,10 +652,6 @@ object HevcDecoder {
           ensureCuQp()
           val res = residualCoding(cx, cy, cLog2, 2, chromaMode)
           addResidual(cr, cW, cx, cy, cSize, res)
-        }
-        if (onTu != null) {
-          onTu(1, cx, cy, cSize, chromaMode, cbfCb, cb, cW)
-          onTu(2, cx, cy, cSize, chromaMode, cbfCr, cr, cW)
         }
       }
       // deblock edges: TU boundaries on the 8-grid
@@ -830,14 +813,6 @@ object HevcDecoder {
         cg -= 1
       }
 
-      if (traceQp && sys.env.get("GRAFT_HEVCCAL_COEF").exists(c =>
-          c == s"$x0,$y0,$cIdx")) {
-        println(s"[hevccal] COEF tb($x0,$y0)c$cIdx size=$size " +
-          s"scan=$scanIdx levels=" +
-          coefs.zipWithIndex.filter(_._1 != 0)
-            .map(t => s"(${t._2 % size},${t._2 / size})=${t._1}")
-            .mkString(" "))
-      }
       // dequant + inverse transform
       val qp =
         if (cIdx == 0) cuQp

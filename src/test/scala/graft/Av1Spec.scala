@@ -124,7 +124,8 @@ class Av1Spec extends AnyFunSuite {
     // was the explicit tx_type of FILTER_PAETH filter-intra blocks
     // (Filter_Intra_Mode_To_Intra_Dir maps mode 4 to DC_PRED, not
     // PAETH_PRED), surfaced by the exact-neighbor block-patch audit
-    // (Av1BlockPatch). No exclusions remain.
+    // (Av1BlockPatch, at src/test/scala/graft/operators/av1/
+    // Av1BlockPatch.scala at commit 8a34f78). No exclusions remain.
     runSweep("s4sweep", 40, 20260816L)
   }
 

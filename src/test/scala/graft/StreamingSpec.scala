@@ -129,4 +129,25 @@ class StreamingSpec extends AnyFunSuite {
     assert(runOnce() ===
       Seq(("10:00", "k"), ("12:00", "adv"), ("11:45", "k")).sorted)
   }
+
+  test("d21 stream pack over a one-row documents table: the empty doc_id ranges are skipped") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_d21_one").toString
+    // doc_id 5 alone: range width 5 / 4 + 1 = 2, so only range b=2 has
+    // rows and b=0, b=1, b=3 have no part file
+    val toks = (0 until 300).map(i => s"t$i")
+    Seq((5L, "src", toks.mkString(" "))).toDF("doc_id", "source", "text")
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    val rows = SparkEntry.queries("d21_stream_pack")(spark, dir).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getString(3),
+        r.getString(4))).toSeq
+    // 300 tokens + "</s>" fill two 128-token windows; the tail is dropped
+    def md5(ts: Seq[String]): String =
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(ts.mkString(" ").getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(rows === Seq(
+      ("src", 0L, "t0", "t127", md5(toks.slice(0, 128))),
+      ("src", 1L, "t128", "t255", md5(toks.slice(128, 256)))))
+  }
 }
