@@ -48,8 +48,9 @@ object Graft {
       geometryColumn: String = "geometry"): Unit =
     geo.GeoParquet.write(df, path, Seq(geometryColumn))
 
-  /** Install graft's SQL names and optimizer rules
-    * ([[GraftExtensions.functions]], [[GraftExtensions.rules]]) on a session
+  /** Install graft's SQL names, optimizer rules and planner strategies
+    * ([[GraftExtensions.functions]], [[GraftExtensions.rules]],
+    * [[GraftExtensions.strategies]]) on a session
     * we did not build (Verify/Bench receive a driver-configured session).
     * Idempotent.
     */
@@ -75,6 +76,9 @@ object Graft {
     val installed = spark.experimental.extraOptimizations
     spark.experimental.extraOptimizations =
       installed ++ GraftExtensions.rules.filterNot(installed.contains)
+    val planned = spark.experimental.extraStrategies
+    spark.experimental.extraStrategies =
+      planned ++ GraftExtensions.strategies.filterNot(planned.contains)
     spark
   }
 

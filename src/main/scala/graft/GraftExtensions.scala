@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ScalaUDF}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
 
@@ -15,22 +16,30 @@ import org.apache.spark.sql.functions.udf
   * }}}
   *
   * injects the graft optimizer rules (bbox row-group pruning, automatic
-  * spatial-join routing) and the whole SQL function surface at SESSION
+  * spatial-join routing), the planner strategy (covering scans that bind
+  * their bounds and skip files) and the whole SQL function surface at SESSION
   * CONSTRUCTION — the only hook available on deployments where user code
   * cannot run before the session exists (Thrift/SQL gateways, notebook
   * services, Spark Connect servers). `Graft.prepare(spark)` installs the
-  * same [[GraftExtensions.functions]] and [[GraftExtensions.rules]] on a
-  * session that already exists; both paths are idempotent and compose.
+  * same [[GraftExtensions.functions]], [[GraftExtensions.rules]] and
+  * [[GraftExtensions.strategies]] on a session that already exists; both
+  * paths are idempotent and compose.
   *
-  * Injected rules land in Catalyst's user-provided-optimizer batch — the
-  * same post-pruning slot `experimental.extraOptimizations` uses, so plan
-  * shape is identical whichever installation path is taken (asserted in
+  * Injected rules land in Catalyst's pre-CBO batch, which runs after the
+  * operator-optimization batches, as the user-provided-optimizer batch
+  * that `experimental.extraOptimizations` feeds does. (`injectOptimizerRule`
+  * would run them inside operator optimization instead, where filter
+  * inference then adds `isnotnull` conjuncts over the covering fields that
+  * the `prepare` path's plan lacks.) Injected strategies run ahead of
+  * Spark's own, as `experimental.extraStrategies` do. So plan shape is
+  * identical whichever installation path is taken (asserted in
   * GraftExtensionsSpec).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftExtensions.rules.foreach(r => ext.injectOptimizerRule(_ => r))
+    GraftExtensions.rules.foreach(r => ext.injectPreCBORule(_ => r))
+    GraftExtensions.strategies.foreach(st => ext.injectPlannerStrategy(_ => st))
     GraftExtensions.functions.foreach(ext.injectFunction)
   }
 }
@@ -139,4 +148,7 @@ object GraftExtensions {
   /** Every optimizer rule graft installs. */
   val rules: Seq[Rule[LogicalPlan]] =
     Seq(graft.plans.SpatialFilterRule, graft.plans.SpatialJoinRule)
+
+  /** Every planner strategy graft installs. */
+  val strategies: Seq[SparkStrategy] = Seq(graft.plans.CoveringScanStrategy)
 }

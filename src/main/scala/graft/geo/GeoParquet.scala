@@ -3,6 +3,7 @@ package graft.geo
 import graft.GeoFunctions
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.column.ParquetProperties
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
@@ -259,7 +260,10 @@ object GeoParquet {
     val writer = new ParquetFileWriter(
       HadoopOutputFile.fromPath(tmp, conf), schema,
       ParquetFileWriter.Mode.OVERWRITE,
-      128L * 1024 * 1024, 8 * 1024 * 1024)
+      128L * 1024 * 1024, 8 * 1024 * 1024,
+      ParquetProperties.DEFAULT_COLUMN_INDEX_TRUNCATE_LENGTH,
+      ParquetProperties.DEFAULT_STATISTICS_TRUNCATE_LENGTH,
+      ParquetProperties.DEFAULT_PAGE_WRITE_CHECKSUM_ENABLED)
     writer.start()
     writer.appendFile(in)
     writer.end(kv)

@@ -4,6 +4,7 @@ import graft.GeoFunctions
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.types.StructType
 import org.locationtech.jts.geom.Geometry
 import org.locationtech.jts.index.strtree.STRtree
@@ -102,12 +103,21 @@ object BroadcastSpatialJoin {
           while (it.hasNext) {
             val idx = it.next().asInstanceOf[Integer].intValue()
             if (pred(g, sGeoms(idx)))
-              out += Row.merge(row, sRows(idx))
+              out += concat(row, sRows(idx))
           }
           out.iterator
         }
       }
     }(RowEncoder.encoderFor(outSchema))
+  }
+
+  /** `a`'s fields then `b`'s, as one row. */
+  private def concat(a: Row, b: Row): Row = {
+    val values = new Array[Any](a.length + b.length)
+    var k = 0
+    while (k < a.length) { values(k) = a.get(k); k += 1 }
+    while (k < values.length) { values(k) = b.get(k - a.length); k += 1 }
+    new GenericRow(values)
   }
 
   def apply(big: DataFrame, small: DataFrame, bigGeom: String, smallGeom: String,

@@ -27,7 +27,7 @@ object Av1Residual {
     Array(2, 4, 4, 4, 5),
     Array(3, 5, 5, 5, 6))
 
-  @inline private def txpl(txSzCtx: Int, ptype: Int, ntx: Int): Int =
+  @inline private def txpl(txSzCtx: Int, ptype: Int): Int =
     txSzCtx * 2 + ptype
 
   private val scanCache =
@@ -372,7 +372,6 @@ object Av1Residual {
           else luma(ly * lw + lx) << 3
         ac(i * w + j) = v
         total += v
-        i * w + j
         j += 1
       }
       i += 1
@@ -482,7 +481,7 @@ object Av1Residual {
       if (c == eob - 1) {
         val ctx = baseEobCtx(c, bwl, ch)
         level = msac.symbol(
-          cdf.coeffBaseEob(txpl(txSzCtx, ptype, 5) * 4 + ctx), 3) + 1
+          cdf.coeffBaseEob(txpl(txSzCtx, ptype) * 4 + ctx), 3) + 1
       } else {
         // the 2D shape rule (tall +11 / wide +16) compares the REAL tx
         // dims, not the 32-clipped coded area: TX_32X64/TX_64X32 clip
@@ -491,7 +490,7 @@ object Av1Residual {
         // its (0,3) coefficient with the square table and desynced).
         val ctx = baseCtx(levels, stride, row, col, pos, cls, w, h)
         level = msac.symbol(
-          cdf.coeffBase(txpl(txSzCtx, ptype, 5) * 42 + ctx), 4)
+          cdf.coeffBase(txpl(txSzCtx, ptype) * 42 + ctx), 4)
       }
       if (level > 2) {
         levels(lpos) = level
@@ -500,7 +499,7 @@ object Av1Residual {
         while (idx < 4 && !done) {
           val ctx = brCtx(levels, stride, row, col, pos, cls)
           val k = msac.symbol(
-            cdf.coeffBr(txpl(brTxCtx, ptype, 5) * 21 + ctx), 4)
+            cdf.coeffBr(txpl(brTxCtx, ptype) * 21 + ctx), 4)
           level += k
           levels(lpos) = math.min(level, 63)
           if (k < 3) done = true

@@ -30,10 +30,12 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, StructType}
   * its own covering column or not at all.
   *
   * Installed through GraftExtensions.rules (the session extension's
-  * optimizer batch, or `experimental.extraOptimizations` via Graft.prepare).
+  * pre-CBO batch, or `experimental.extraOptimizations` via Graft.prepare).
   * That batch runs after predicate pushdown, which is fine: FileSourceStrategy
   * re-collects filters sitting above the relation at physical planning, so
-  * conjuncts added here still reach the scan.
+  * conjuncts added here still reach the scan. There
+  * [[CoveringScanStrategy]] binds their bounds in the generated filter
+  * and skips the files the bounds rule out.
   */
 object SpatialFilterRule extends Rule[LogicalPlan] {
 
@@ -95,6 +97,12 @@ object SpatialFilterRule extends Rule[LogicalPlan] {
       .orElse(child.output.find(_.name == s"__bbox_${geomAttr.name}"))
       .filter(a => bboxFieldType(a.dataType).isDefined)
   }
+
+  /** Every covering column of `relation` that [[coveringOf]] accepts for
+    * one of its output attributes.
+    */
+  private[plans] def coveringsOf(relation: LogicalPlan): Seq[Attribute] =
+    relation.output.flatMap(coveringOf(_, relation)).distinct
 
   /** The uniform numeric type of a bbox covering struct's four fields
     * (float per the published 1.1 recommendation, or double as our writer

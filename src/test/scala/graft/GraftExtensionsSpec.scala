@@ -98,4 +98,32 @@ class GraftExtensionsSpec extends AnyFunSuite {
         !e.isInstanceOf[NoSuchElementException], s"$call: $e")
     }
   }
+
+  test("a covering range query plans alike through the extension and through prepare()") {
+    val out = "/tmp/graft_test/ext_covering_scan"
+    val prepared = TestSpark.spark
+    graft.geo.GeoParquet.write(prepared.range(1000).toDF("id")
+      .select(org.apache.spark.sql.functions.col("id"),
+        GeoFunctions.st_point(org.apache.spark.sql.functions.col("id").cast("double"),
+          org.apache.spark.sql.functions.lit(0.0)).as("geometry")),
+      out, Seq("geometry"), addBboxColumn = true)
+    val box = GeoFunctions.stMakeBoxF(100.0, -1.0, 110.0, 1.0)
+    // the planner's output, expression ids masked (each session numbers its own)
+    def planned(s: SparkSession): String = {
+      import org.apache.spark.sql.functions.{col, lit}
+      val q = graft.geo.GeoParquet.read(s, out)
+        .filter(GeoFunctions.st_intersects(col("geometry"), lit(box))).select(col("id"))
+      val plan = q.queryExecution.sparkPlan
+      val bound = plan.collect { case f: org.apache.spark.sql.execution.FilterExec =>
+        f.condition.collect { case b: graft.plans.BoundParam => b.value }
+      }.flatten
+      assert(bound.sorted === Seq(-1.0, 1.0, 100.0, 110.0), plan.toString)
+      assert(plan.collect { case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.relation.location }.forall(_.isInstanceOf[graft.plans.CoveringFileIndex]), plan.toString)
+      assert(q.count() === 11)
+      plan.toString.replaceAll("#\\d+", "#")
+    }
+    val viaPrepare = planned(prepared)
+    withExtensionsOnly(s => assert(planned(s) === viaPrepare))
+  }
 }

@@ -150,4 +150,25 @@ class StreamingSpec extends AnyFunSuite {
       ("src", 0L, "t0", "t127", md5(toks.slice(0, 128))),
       ("src", 1L, "t128", "t255", md5(toks.slice(128, 256)))))
   }
+
+  /** A `documents.parquet` holding the table's schema and no row. */
+  private def emptyDocuments(prefix: String): String = {
+    val spark = TestSpark.spark
+    val dir = Files.createTempDirectory(prefix).toString
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"))
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  test("d21 stream pack over an empty documents table returns no rows") {
+    val dir = emptyDocuments("graft_d21_empty")
+    assert(SparkEntry.queries("d21_stream_pack")(TestSpark.spark, dir).collect().isEmpty)
+  }
+
+  test("d15 incremental stream dedup over an empty documents table returns no rows") {
+    val dir = emptyDocuments("graft_d15_empty")
+    assert(SparkEntry.queries("d15_stream_incr_dedup")(TestSpark.spark, dir).collect().isEmpty)
+  }
 }
