@@ -1,16 +1,18 @@
 package graft.geo
 
 import graft.GeoFunctions
+import graft.functions.{StEnvelope, ZOrder, ZRangeId}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.column.ParquetProperties
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{MetadataBuilder, StructType}
 
 /** GeoParquet I/O (SURVEY.md §2 A1/A2): parquet files whose footer carries
@@ -93,11 +95,16 @@ object GeoParquet {
     *   midpoint before writing — spatially close rows land in the same
     *   file/row group, so each file's `__bbox_<col>` min/max statistics cover a
     *   TIGHT region and SpatialFilterRule's range predicates skip most row
-    *   groups. The curve is quantized over the first geometry column's
-    *   extent, found by one min/max aggregate before the write; rows the
-    *   write sees outside it (a nondeterministic input) clamp to the edge
-    *   cells, which costs clustering quality only — footers come from the
-    *   written rows.
+    *   groups. One job before the write reads the first geometry column
+    *   (see [[zRanges]]): the curve is quantized over its extent, and the
+    *   file split points come from a sample of its midpoints, as Spark's
+    *   range partitioning samples. The write then shuffles each row
+    *   straight to its Z range, so the input is evaluated twice in all.
+    *   Rows the write sees outside the extent (a nondeterministic input)
+    *   clamp to the edge cells, which costs clustering quality only —
+    *   footers come from the written rows. Null and empty geometries go to
+    *   the first file. An input with no envelope at all (empty, or only
+    *   null/empty geometries) is written unclustered.
     */
   def write(
       df: DataFrame,
@@ -113,6 +120,7 @@ object GeoParquet {
     require(spatialClusterFiles.isEmpty || partitionBy.isEmpty,
       "spatial clustering and partitionBy together multiply to files-per-" +
         "partition-value × cluster files; choose one layout")
+    require(spatialClusterFiles.forall(_ > 0), "spatial clustering needs at least one file")
     require(spatialClusterFiles.isEmpty || !df.columns.contains("__z"),
       "input already has a __z column — spatial clustering reserves that name")
     // GeoParquet 1.1 covering-column pattern: a per-row envelope struct
@@ -141,24 +149,73 @@ object GeoParquet {
       (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer).save(path)
     }
 
-    spatialClusterFiles match {
-      case Some(n) =>
+    spatialClusterFiles.flatMap(zRanges(df, geometryColumns.head, _)) match {
+      case Some((f, bounds)) =>
         val env = GeoFunctions.stEnvelopeStruct(col(geometryColumns.head))
-        val frame = df.agg(min(env.getField("xmin")), min(env.getField("ymin")),
-          max(env.getField("xmax")), max(env.getField("ymax"))).head()
-        if (frame.isNullAt(0))
-          throw new IllegalArgumentException(
-            "spatial clustering: geometry column has no bbox (empty/all-null)")
         val cx = (env.getField("xmin") + env.getField("xmax")) / 2
         val cy = (env.getField("ymin") + env.getField("ymax")) / 2
-        save(out.withColumn("__z", graft.functions.ZOrder.zorder(cx, cy,
-            frame.getDouble(0), frame.getDouble(1), frame.getDouble(2), frame.getDouble(3)))
-          .repartitionByRange(n, col("__z"))
+        save(out.withColumn("__z", ZOrder.zorder(cx, cy, f.xmin, f.ymin, f.xmax, f.ymax))
+          .repartitionById(bounds.length + 1, GraftColumnBridge.column(
+            ZRangeId(GraftColumnBridge.expression(col("__z")), bounds)))
           .sortWithinPartitions("__z")
           .drop("__z"))
       case None => save(out)
     }
     invalidateMetadata(path)
+  }
+
+  /** The Z-order frame and the `n - 1` (or fewer: a file per range) Z
+    * split points of a clustered write, from ONE job over `geom`: each
+    * input partition returns its exact envelope extent, its count of rows
+    * with an envelope and a reservoir sample of their midpoints. The
+    * sizes, sampler, seeds and bounds are those of Spark's range exchange
+    * (`RangePartitioner`: per output partition
+    * `spark.sql.execution.rangeExchange.sampleSizePerPartition` samples,
+    * at most 1e6 in all), each weighted by its partition's count over its
+    * sample size; an
+    * unbalanced partition is not re-sampled, so no second job runs. None
+    * when no row has an envelope.
+    */
+  private def zRanges(df: DataFrame, geom: String,
+      n: Int): Option[(ZOrder.Frame, Array[Long])] = {
+    val rows = df.select(col(geom)).queryExecution.toRdd
+    val sampleSize = math.min(
+      SQLConf.get.rangeExchangeSampleSizePerPartition.toDouble * n, 1e6)
+    val perPartition = math.ceil(3.0 * sampleSize / math.max(rows.getNumPartitions, 1)).toInt
+    val shift = rows.id
+    val sketches = rows.mapPartitionsWithIndex { (idx, it) =>
+      val box = Array(Double.PositiveInfinity, Double.PositiveInfinity,
+        Double.NegativeInfinity, Double.NegativeInfinity)
+      // the sampler drains the iterator, so `box` is complete once it returns
+      val mids = it.flatMap { r =>
+        val env = if (r.isNullAt(0)) null else StEnvelope.compute(r.getBinary(0))
+        if (env == null) Iterator.empty
+        else {
+          val x0 = env.getDouble(0); val y0 = env.getDouble(1)
+          val x1 = env.getDouble(2); val y1 = env.getDouble(3)
+          if (x0 < box(0)) box(0) = x0
+          if (y0 < box(1)) box(1) = y0
+          if (x1 > box(2)) box(2) = x1
+          if (y1 > box(3)) box(3) = y1
+          Iterator.single(((x0 + x1) / 2, (y0 + y1) / 2))
+        }
+      }
+      val (sample, count) = GraftColumnBridge.reservoirSampleAndCount(
+        mids, perPartition, scala.util.hashing.byteswap32(idx ^ (shift << 16)).toLong)
+      Iterator.single((box, count, sample))
+    }.collect().filter(_._2 > 0)
+    if (sketches.isEmpty) None
+    else {
+      val boxes = sketches.map(_._1)
+      val frame = ZOrder.Frame(boxes.map(_(0)).min, boxes.map(_(1)).min,
+        boxes.map(_(2)).max, boxes.map(_(3)).max)
+      val candidates = scala.collection.mutable.ArrayBuffer.empty[(Long, Float)]
+      sketches.foreach { case (_, count, sample) =>
+        val weight = (count.toDouble / sample.length).toFloat
+        sample.foreach { case (x, y) => candidates += ((ZOrder.value(x, y, frame), weight)) }
+      }
+      Some((frame, GraftColumnBridge.determineBounds(candidates, math.min(n, candidates.size))))
+    }
   }
 
   /** Retrofit a `geo` footer onto an EXISTING parquet dataset without

@@ -69,13 +69,17 @@ object GeoParquetFileFormat {
   * writing wholesale, folds each non-null geometry into its column's
   * [[GeoFileStats]] on the way, and returns the finished `geo` key from
   * `finalizeWrite` (parquet-java merges it into the footer at close).
-  * One instance per part file, so the stats are the file's own.
+  * One instance per part file, so the stats are the file's own. When the
+  * row carries the covering column the template declares (the envelope
+  * struct `GeoParquet.write(addBboxColumn = true)` adds), the bbox is read
+  * from it rather than computed from the WKB a second time.
   */
 class GeoParquetWriteSupport extends WriteSupport[InternalRow] {
   private val delegate = new ParquetWriteSupport
   private var template: GeoParquetMetadata = _
   private var columns: Array[String] = _
   private var ordinals: Array[Int] = _
+  private var coverings: Array[Int] = _ // -1: no covering in the row
   private var stats: Array[GeoFileStats] = _
 
   override def init(configuration: Configuration): WriteSupport.WriteContext = {
@@ -86,6 +90,14 @@ class GeoParquetWriteSupport extends WriteSupport[InternalRow] {
       .asInstanceOf[StructType]
     columns = template.columns.keys.toArray
     ordinals = columns.map(rowSchema.fieldIndex)
+    // a covering of another shape (say float fields) is not the envelope
+    val envelope = graft.functions.StEnvelope.schema.map(f => (f.name, f.dataType))
+    coverings = columns.map(c => template.columns(c).covering
+      .filter(cov => rowSchema.fieldNames.contains(cov) && (rowSchema(cov).dataType match {
+        case t: StructType => t.map(f => (f.name, f.dataType)) == envelope
+        case _ => false
+      }))
+      .fold(-1)(rowSchema.fieldIndex(_)))
     stats = columns.map(_ => new GeoFileStats)
     delegate.init(configuration)
   }
@@ -96,7 +108,12 @@ class GeoParquetWriteSupport extends WriteSupport[InternalRow] {
   override def write(record: InternalRow): Unit = {
     var i = 0
     while (i < ordinals.length) {
-      if (!record.isNullAt(ordinals(i))) stats(i).add(record.getBinary(ordinals(i)))
+      if (!record.isNullAt(ordinals(i))) {
+        val wkb = record.getBinary(ordinals(i))
+        val cov = coverings(i)
+        if (cov < 0) stats(i).add(wkb)
+        else stats(i).add(wkb, if (record.isNullAt(cov)) null else record.getStruct(cov, 4))
+      }
       i += 1
     }
     delegate.write(record)
@@ -111,9 +128,11 @@ class GeoParquetWriteSupport extends WriteSupport[InternalRow] {
 
 /** One file's geometry types and bbox, folded one WKB value at a time.
   * The bbox is [[graft.functions.StEnvelope.compute]]'s envelope (the
-  * covering column's value); the type name comes from the WKB header, so
-  * no geometry is built. Malformed bytes throw, rejected by StEnvelope's
-  * JTS fallback: they are never guessed at.
+  * covering column's value, taken from the row when it has one); the type
+  * name comes from the WKB header, so no geometry is built. Malformed
+  * bytes throw, rejected by StEnvelope's JTS fallback (here or in the
+  * covering expression, which parses the same bytes first): they are
+  * never guessed at.
   */
 private[geo] final class GeoFileStats {
   private var typeMask = 0 // bit k set once type code k (1..7) is seen
@@ -121,8 +140,10 @@ private[geo] final class GeoFileStats {
   private var xmin, ymin = Double.MaxValue
   private var xmax, ymax = Double.MinValue
 
-  def add(wkb: Array[Byte]): Unit = {
-    val env = graft.functions.StEnvelope.compute(wkb)
+  def add(wkb: Array[Byte]): Unit = add(wkb, graft.functions.StEnvelope.compute(wkb))
+
+  /** Fold `wkb`, whose envelope is `env` (null for an empty geometry). */
+  def add(wkb: Array[Byte], env: InternalRow): Unit = {
     if (env != null) { // an empty geometry has no envelope
       hasBbox = true
       xmin = math.min(xmin, env.getDouble(0)); ymin = math.min(ymin, env.getDouble(1))

@@ -94,7 +94,7 @@ object Brotli {
       var i = 0
       while (i < n) {
         val p = pos + i
-        v |= (((b((p >>> 3).toInt) >> (p & 7)) & 1).toInt) << i
+        v |= (((b((p >>> 3).toInt) >> (p & 7).toInt) & 1).toInt) << i
         i += 1
       }
       pos += n
@@ -246,7 +246,7 @@ object Brotli {
         while (k < 4) {
           val p = br.pos + k
           if (p < br.end)
-            peek |= (((br.b((p >>> 3).toInt) >> (p & 7)) & 1).toInt) << k
+            peek |= (((br.b((p >>> 3).toInt) >> (p & 7).toInt) & 1).toInt) << k
           k += 1
         }
         val l = plen(peek)

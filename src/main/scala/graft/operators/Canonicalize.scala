@@ -54,7 +54,7 @@ object Canonicalize {
   /** Layout-invariant, order-sensitive SHA-256-XOR hex digest of `df`. */
   def hash(df: DataFrame): String = {
     val cols = df.columns.sorted
-    val projected = df.select(cols.map(org.apache.spark.sql.functions.col): _*)
+    val projected = df.select(cols.toIndexedSeq.map(org.apache.spark.sql.functions.col): _*)
     val canonical = projected.rdd.map(formatRow).sortBy(identity)
     val acc = canonical.zipWithIndex()
       .mapPartitions { rows =>

@@ -70,7 +70,7 @@ object IvfAnn {
 
   /** Per-centroid cosine columns against literal centroids (codegen'd). */
   private def simArray(vecCol: Column, cs: Array[Array[Float]]): Column =
-    array(cs.map(c => call_function("cosine_sim", vecCol, typedlit(c))): _*)
+    array(cs.toIndexedSeq.map(c => call_function("cosine_sim", vecCol, typedlit(c))): _*)
 
   /** argmax bucket id (first max wins — deterministic); NULL-sim (zero
     * norm) vectors land in bucket 0.
@@ -100,7 +100,7 @@ object IvfAnn {
       topK: Int, nprobe: Int): DataFrame = {
     val probes = probeOrder(q, cs).take(nprobe).map(_.toLong)
     indexed
-      .filter(col("__ivf_bucket").isin(probes: _*))
+      .filter(col("__ivf_bucket").isin(probes.toIndexedSeq: _*))
       .select(col(idCol),
         call_function("cosine_sim", col(vecCol), typedlit(q)).as("sim"))
       .filter(col("sim").isNotNull)

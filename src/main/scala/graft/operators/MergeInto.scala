@@ -36,13 +36,13 @@ object MergeInto {
   def applyChanges(base: DataFrame, changes: DataFrame, key: String,
       version: String, deleteFlag: String): DataFrame = {
     val payload = base.columns // result schema = base schema
-    val packed = struct(col(deleteFlag) +: payload.map(col): _*)
+    val packed = struct(col(deleteFlag) +: payload.toIndexedSeq.map(col): _*)
     val latest = changes
       .groupBy(col(key).as("__merge_key"))
       .agg(max_by(packed, col(version)).as("__newest"))
     val survivors = latest
       .filter(!col(s"__newest.$deleteFlag"))
-      .select(payload.map(c => col(s"__newest.$c").as(c)): _*)
+      .select(payload.toIndexedSeq.map(c => col(s"__newest.$c").as(c)): _*)
     val untouched = base.join(
       latest.select(col("__merge_key")), col(key) === col("__merge_key"), "left_anti")
     untouched.unionByName(survivors)

@@ -22,7 +22,7 @@ object Salted {
       keys: Seq[String],
       valueCol: String,
       saltBuckets: Int = 16): DataFrame = {
-    val salt = pmod(xxhash64(df.columns.map(col): _*), lit(saltBuckets))
+    val salt = pmod(xxhash64(df.columns.toIndexedSeq.map(col): _*), lit(saltBuckets))
     df.withColumn("__salt", salt)
       .groupBy((keys :+ "__salt").map(col): _*)
       .agg(sum(col(valueCol)).as("__psum"), count(lit(1)).as("__pcnt"))
@@ -41,7 +41,7 @@ object Salted {
       key: String,
       saltBuckets: Int = 16): DataFrame = {
     val l = skewedLeft.withColumn("__salt",
-      pmod(xxhash64(skewedLeft.columns.map(col): _*), lit(saltBuckets)))
+      pmod(xxhash64(skewedLeft.columns.toIndexedSeq.map(col): _*), lit(saltBuckets)))
     val r = right
       .withColumn("__salt", explode(sequence(lit(0L), lit(saltBuckets - 1L))))
     l.join(r, Seq(key, "__salt")).drop("__salt")

@@ -384,14 +384,14 @@ object SevenZip {
         explicitSizes = folders.zip(numUnpack).map { case (f, n) =>
           if (n == 0) Vector.empty[Long]
           else {
-            val given = (0 until n - 1).map { _ =>
+            val stated = (0 until n - 1).map { _ =>
               val v = r.num()
               if (v < 0 || v > f.unpackSize) throw Malformed
               v
             }.toVector
-            val rest = f.unpackSize - given.sum
+            val rest = f.unpackSize - stated.sum
             if (rest < 0) throw Malformed
-            given :+ rest
+            stated :+ rest
           }
         }.toVector
         sid = r.num()

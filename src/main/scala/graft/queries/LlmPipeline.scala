@@ -2909,7 +2909,7 @@ object LlmPipeline extends QueryBlock {
         val encoded = graft.operators.ProductQuantizer.encode(indexed, "embedding", cb)
         val probes = graft.operators.IvfAnn.probeOrder(q, cs).take(k).map(_.toLong)
         graft.operators.ProductQuantizer.adcSearch(
-          encoded.filter(col("__ivf_bucket").isin(probes: _*)),
+          encoded.filter(col("__ivf_bucket").isin(probes.toIndexedSeq: _*)),
           "vec_id", q, cb, topK = 10)
       },
       Some("""WITH samp AS (SELECT vec_id, embedding FROM embeddings
@@ -3029,7 +3029,7 @@ object LlmPipeline extends QueryBlock {
           val probes = graft.operators.IvfAnn.probeOrder(q, cs)
             .take(nprobe).map(_.toLong)
           val rest = encoded.filter(col("vec_id") =!= qid)
-          val cand = rest.filter(col("__ivf_bucket").isin(probes: _*))
+          val cand = rest.filter(col("__ivf_bucket").isin(probes.toIndexedSeq: _*))
           val truth = rest
             .select(col("vec_id"),
               call_function("cosine_sim", col("embedding"), typedlit(q.toSeq)).as("sim"))
@@ -3842,7 +3842,9 @@ object LlmPipeline extends QueryBlock {
     "e38_incremental_dedup" -> QueryDef(
       (s, dir) => fixtureCheck(s, dir, "e38_incremental_dedup", {
         val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        val threshold = (docs.agg(max("doc_id")).head.getLong(0) + 1L) * 4L / 5L
+        // an empty table has a null max: threshold 0, so no doc is old
+        val maxId = docs.agg(max("doc_id")).head()
+        val threshold = if (maxId.isNullAt(0)) 0L else (maxId.getLong(0) + 1L) * 4L / 5L
         graft.operators.IncrementalDedup.verdicts(docs, "doc_id", "text", threshold)
       }, Seq("doc_id")),
       Some(fixtureSql("e38_incremental_dedup",

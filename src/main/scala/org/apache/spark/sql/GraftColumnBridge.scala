@@ -1,5 +1,7 @@
 package org.apache.spark.sql
 
+import scala.collection.mutable.ArrayBuffer
+import scala.reflect.ClassTag
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge into the sql package for building `Column`s from native catalyst
@@ -30,4 +32,18 @@ object GraftColumnBridge {
     (named.inputEncoders.size,
       es => classic.UserDefinedFunctionUtils.toScalaUDF(named, es))
   }
+
+  /** `RangePartitioner`'s per-partition sampler (private[spark]): a
+    * reservoir sample of at most `k` items and the count of all of them.
+    */
+  def reservoirSampleAndCount[T: ClassTag](items: Iterator[T], k: Int,
+      seed: Long): (Array[T], Long) =
+    org.apache.spark.util.random.SamplingUtils.reservoirSampleAndCount(items, k, seed)
+
+  /** `RangePartitioner`'s split points (private[spark]): at most
+    * `partitions - 1` ascending, distinct bounds that cut the weighted
+    * candidates into ranges of about equal weight.
+    */
+  def determineBounds(candidates: ArrayBuffer[(Long, Float)], partitions: Int): Array[Long] =
+    org.apache.spark.RangePartitioner.determineBounds(candidates, partitions)
 }

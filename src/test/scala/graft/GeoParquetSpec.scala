@@ -361,4 +361,54 @@ class GeoParquetSpec extends AnyFunSuite {
     assert(plan.contains("PushedFilters: [IsNotNull(id), GreaterThan(id,990)]"))
     assert(spark.read.parquet(out).filter(col("id") > 990).count() === 9)
   }
+
+  test("a clustered write starts 3 jobs: frame-and-sample, shuffle, write") {
+    val df = spark.range(0, 4000, 1, 4).toDF("id")
+      .select(col("id"), GeoFunctions.st_point((col("id") % 97).cast("double"),
+        (col("id") % 89).cast("double")).as("geometry"))
+    val sc = spark.sparkContext
+    val key = "graft.test.phase"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty(key))).foreach(started.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "write")
+      GeoParquet.write(df, "/tmp/graft_test/geo_cluster_jobs", Seq("geometry"),
+        addBboxColumn = true, spatialClusterFiles = Some(8))
+      sc.setLocalProperty(key, "fence")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!started.contains("fence") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(started.contains("fence"), "listener bus did not drain")
+      assert(started.toArray.count(_ == "write") === 3)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    assert(GeoParquet.read(spark, "/tmp/graft_test/geo_cluster_jobs").count() === 4000)
+  }
+
+  test("with a covering column, each footer bbox is its file's covering min/max union") {
+    val out = "/tmp/graft_test/geo_footer_covering"
+    val pts = spark.range(0, 600, 1, 3).toDF("id")
+      .select(col("id"), GeoFunctions.st_point((col("id") * 7 % 300).cast("double") - 100.0,
+        (col("id") * 13 % 200).cast("double") * 0.5).as("geometry"))
+    val boxes = spark.createDataFrame((0 until 40).map { i =>
+      (1000L + i, GeoFunctions.stMakeBoxF(i * 5.0 - 80.0, -i * 2.0, i * 5.0 - 60.0, 30.0 - i))
+    }).toDF("id", "geometry")
+    GeoParquet.write(pts.unionByName(boxes), out, Seq("geometry"), addBboxColumn = true,
+      spatialClusterFiles = Some(4))
+    val files = new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(files.length === 4)
+    files.foreach { f =>
+      val r = spark.read.parquet(f.getPath)
+        .agg(min(col("__bbox_geometry.xmin")), min(col("__bbox_geometry.ymin")),
+          max(col("__bbox_geometry.xmax")), max(col("__bbox_geometry.ymax"))).head()
+      assert(GeoParquet.readMetadata(spark, f.getPath).get.columns("geometry").bbox ===
+        Some((r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))), f.getName)
+    }
+  }
 }

@@ -89,4 +89,13 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(out.map(r => (r.getLong(0), r.getString(1))).toSeq ===
       Seq((12L, "unique"), (13L, "unique")))
   }
+
+  test("e38 over an empty documents table returns no rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_e38_empty").toString
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"))
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    assert(SparkEntry.queries("e38_incremental_dedup")(spark, dir).collect().isEmpty)
+  }
 }

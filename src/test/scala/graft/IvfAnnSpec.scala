@@ -47,7 +47,7 @@ class IvfAnnSpec extends AnyFunSuite {
 
   test("partial probe searches a strict subset and still finds neighbours") {
     val probes = IvfAnn.probeOrder(qv, cs).take(2).map(_.toLong)
-    val candidates = indexed.filter(col("__ivf_bucket").isin(probes: _*)).count()
+    val candidates = indexed.filter(col("__ivf_bucket").isin(probes.toIndexedSeq: _*)).count()
     val corpus = emb.count()
     assert(candidates < corpus, s"nprobe=2 candidates $candidates !< corpus $corpus")
     val got = IvfAnn.search(indexed, "vec_id", "embedding", cs, qv, 10, 2)

@@ -49,7 +49,7 @@ class PqSpec extends AnyFunSuite {
       .orderBy(md5(col("id").cast("binary")), col("id"))
       .limit(16).collect().map(_.getString(0).toLong)
     val codes = ProductQuantizer.encode(emb, "embedding", cb)
-      .filter(col("vec_id").isin(sampleIds: _*))
+      .filter(col("vec_id").isin(sampleIds.toIndexedSeq: _*))
       .select(col("vec_id"), col("__pq_code")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     sampleIds.zipWithIndex.foreach { case (id, c) =>
@@ -125,7 +125,7 @@ class PqSpec extends AnyFunSuite {
     val encoded = ProductQuantizer.encode(indexed, "embedding", cb)
     val probes = operators.IvfAnn.probeOrder(q, cs).take(2).map(_.toLong)
     val top = ProductQuantizer.adcSearch(
-      encoded.filter(col("__ivf_bucket").isin(probes: _*)),
+      encoded.filter(col("__ivf_bucket").isin(probes.toIndexedSeq: _*)),
       "vec_id", q, cb, topK = 10).collect()
     assert(top.length === 10)
     val sameCluster = top.map(_.getLong(0)).count(id =>
