@@ -1,13 +1,12 @@
 package graft.plans
 
-import graft.GeoFunctions
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.GraftColumnBridge.{column, ofRows}
+import graft.functions.StEnvelope
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.GraftColumnBridge.{column, executedPlan, ofRows}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, JoinHint, Limit, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
 /** Spatial-join routing (SURVEY.md §4.3; the automatic form of
@@ -55,14 +54,16 @@ import org.apache.spark.sql.types.DoubleType
   * verbatim (a tuned deployment pins it to ~ the median envelope extent in
   * the data's coordinate units). When UNSET the rule derives it from the
   * data at rewrite time — a bounded sample (first [[SampleRows]] rows per
-  * side) of envelope extents. Each side is one `limit(SampleRows)` collect
-  * of its non-null envelopes; the median and max are taken on the driver
-  * (the exact lower median, which is the element `percentile_approx`
-  * picks at these sizes). A `LocalRelation` side (a `createDataFrame` of
-  * a local Seq) folds to a local table scan and costs no job, so a table ⋈
-  * local-query-points join plans with one job. Spark's `take` reads one
-  * partition first and more only while it has fewer than SampleRows rows,
-  * so a side whose first partition is smaller can cost a few more jobs.
+  * side) of envelope extents. Each side's sample is a `Limit` over a
+  * projection of its envelope fields, optimized by the session optimizer,
+  * planned physically and collected on the driver; the median and max are
+  * taken there (the exact lower median, which is the element
+  * `percentile_approx` picks at these sizes). A `LocalRelation` side (a
+  * `createDataFrame` of a local Seq) folds to a local table scan and costs
+  * no job, so a table ⋈ local-query-points join plans with one job. The
+  * limit's collect reads one partition first and more only while it has
+  * fewer than SampleRows rows, so a side whose first partition is smaller
+  * can cost a few more jobs.
   * The per-side stats are combined as
   * `max(2·max(median_extent per side), max_extent/64, span/4096)`:
   *  - 2·median targets ~1-4 cells per typical row (bounded replication);
@@ -105,20 +106,25 @@ import org.apache.spark.sql.types.DoubleType
   *  - skipped when the condition already carries a cross-side equality
   *    (Spark hash-joins on it; the grid would only multiply rows).
   *
-  * Implementation note: the rewrite rebuilds the subtree with the
-  * DataFrame API over the already-analyzed children (GraftColumnBridge
-  * .ofRows) and splices back the analyzed plan. The experimental batch
-  * runs AFTER column pruning, so the children arrive already pruned —
-  * the spliced subtree keeps their narrow scans (ReadSchema carries only
-  * the join keys + geometry inputs; PlanSpec asserts this on a wide
-  * table). The O(n·m)→O(candidates) work reduction then comes on top of
-  * normal scan pruning.
+  * Implementation note: the grid route builds resolved logical nodes
+  * over the children it is given — a `Project` adding the envelope, two
+  * `Generate(Explode(Sequence))` nodes for the cell columns per side, the
+  * equi-`Join` and a `Project` restoring the original output — so neither
+  * the rewrite nor the cell sample re-analyzes the children or starts an
+  * SQL execution of its own. The rule runs AFTER column pruning (in the
+  * pre-CBO batch, or the last batch when installed through
+  * `Graft.prepare`), so the children arrive already pruned and the
+  * spliced subtree keeps their narrow scans (ReadSchema carries only the
+  * join keys + geometry inputs; PlanSpec asserts this on a wide table);
+  * in the pre-CBO batch the later optimizer batches still run over the
+  * spliced nodes. The O(n·m)→O(candidates) work reduction then comes on
+  * top of normal scan pruning.
   */
 object SpatialJoinRule extends Rule[LogicalPlan] {
 
   val CellConf = "spark.graft.spatialJoin.cell"
 
-  /** Rows sampled per side when deriving the cell size (a `limit`, so the
+  /** Rows sampled per side when deriving the cell size (a `Limit`, so the
     * sampling collect reads only the first partitions of each input).
     */
   val SampleRows = 20000
@@ -176,7 +182,7 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
 
   private def rewriteBroadcast(j: Join, l: LogicalPlan, r: LogicalPlan,
       route: Route, cond: Expression, smallIsLeft: Boolean): LogicalPlan = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
     val spark = SparkSession.active
     val (bigPlan, bigGeom, smallPlan, smallGeom) =
       if (smallIsLeft) (r, route.rg, l, route.lg) else (l, route.lg, r, route.rg)
@@ -282,26 +288,69 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
       case _ => e
     }
 
-  /** Envelope of `g`, expanded by `expand` when present (dwithin route). */
-  private def envelopeOf(g: Expression, expand: Option[Expression]): Column = {
-    val env = GeoFunctions.stEnvelopeStruct(column(g))
+  private def sessionTz: Option[String] =
+    Some(SparkSession.active.sessionState.conf.sessionLocalTimeZone)
+
+  /** Field `name` of an envelope struct (`StEnvelope`'s field order). */
+  private def field(env: Expression, name: String): Expression =
+    GetStructField(env, StEnvelope.schema.fieldIndex(name), Some(name))
+
+  /** Envelope of `g` as a resolved struct<xmin, ymin, xmax, ymax>, expanded
+    * by `expand` when present (dwithin route).
+    */
+  private def envelope(g: Expression, expand: Option[Expression]): Expression = {
+    val env = StEnvelope(g)
     expand match {
       case None => env
       case Some(e) =>
-        val rad = column(bind(e)).cast("double")
-        struct(
-          (env.getField("xmin") - rad).as("xmin"),
-          (env.getField("ymin") - rad).as("ymin"),
-          (env.getField("xmax") + rad).as("xmax"),
-          (env.getField("ymax") + rad).as("ymax"))
+        val rad = Cast(bind(e), DoubleType, sessionTz)
+        CreateNamedStruct(StEnvelope.schema.fieldNames.toSeq.flatMap { name =>
+          val v = field(env, name)
+          Seq(Literal(name), if (name.endsWith("min")) Subtract(v, rad) else Add(v, rad))
+        })
     }
   }
 
+  /** One side's sampled envelopes: the extents, sorted, and their bbox. */
+  private final case class Sample(ext: Array[Double], xmin: Double, xmax: Double,
+      ymin: Double, ymax: Double)
+
+  /** The first [[SampleRows]] envelopes of `p` (non-null only). The sample
+    * plan is optimized once by the session optimizer (which folds a
+    * `LocalRelation` side to a local table, so it starts no job) and
+    * collected through `executeCollect`, which reads the first partition
+    * and more only while it is short of the limit (`executeTake` on the
+    * `CollectLimitExec` root would shuffle every partition into one).
+    */
+  private def sample(spark: SparkSession, p: LogicalPlan, g: Expression,
+      expand: Option[Expression]): Sample = {
+    val env = envelope(g, expand)
+    val Seq(x0, y0, x1, y1) = StEnvelope.schema.fieldNames.toSeq.map(field(env, _))
+    val cols = Seq(Greatest(Seq(Subtract(x1, x0), Subtract(y1, y0))), x0, x1, y0, y1)
+    val plan = Limit(Literal(SampleRows),
+      Project(cols.zipWithIndex.map { case (c, i) => Alias(c, s"_$i")() }, p))
+    val rows = executedPlan(spark, spark.sessionState.optimizer.execute(plan)).executeCollect()
+    val ext = new Array[Double](rows.length)
+    val box = Array(Double.PositiveInfinity, Double.NegativeInfinity,
+      Double.PositiveInfinity, Double.NegativeInfinity)
+    var n = 0
+    for (row <- rows if !row.isNullAt(0)) {
+      ext(n) = row.getDouble(0)
+      n += 1
+      box(0) = math.min(box(0), row.getDouble(1))
+      box(1) = math.max(box(1), row.getDouble(2))
+      box(2) = math.min(box(2), row.getDouble(3))
+      box(3) = math.max(box(3), row.getDouble(4))
+    }
+    val sorted = java.util.Arrays.copyOf(ext, n)
+    java.util.Arrays.sort(sorted)
+    Sample(sorted, box(0), box(1), box(2), box(3))
+  }
+
   /** Derive the grid cell from a bounded sample of both sides' envelope
-    * extents (see scaladoc). Each side is sampled by its own collect of at
-    * most [[SampleRows]] rows: a `LocalRelation` side folds to a local
-    * table scan and starts no job. Rows with a null envelope are dropped.
-    * Medians are taken PER SIDE and the larger one wins: a dwithin join of
+    * extents (see scaladoc): one [[sample]] per side, a `LocalRelation`
+    * side costing no job. Rows with a null envelope are dropped. Medians
+    * are taken PER SIDE and the larger one wins: a dwithin join of
     * expanded regions against raw points must grid at the region scale,
     * not at the union median (which the point side would drag to zero,
     * over-replicating the regions). The median is the exact lower median
@@ -310,36 +359,21 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
     */
   private def deriveCell(spark: SparkSession, l: LogicalPlan, r: LogicalPlan,
       route: Route): Option[Double] = {
-    // one row per sampled envelope: ext, xmin, xmax, ymin, ymax
-    def extents(p: LogicalPlan, g: Expression, expand: Option[Expression]): Array[Array[Double]] = {
-      val env = envelopeOf(g, expand)
-      ofRows(spark, p)
-        .limit(SampleRows)
-        .select(
-          greatest(env.getField("xmax") - env.getField("xmin"),
-            env.getField("ymax") - env.getField("ymin")),
-          env.getField("xmin"), env.getField("xmax"),
-          env.getField("ymin"), env.getField("ymax"))
-        .collect()
-        .collect { case row if !row.isNullAt(0) => Array.tabulate(5)(row.getDouble) }
-    }
-    val sides = Seq(extents(l, route.lg, route.lExpand), extents(r, route.rg, route.rExpand))
+    val sides = Seq(sample(spark, l, route.lg, route.lExpand),
+      sample(spark, r, route.rg, route.rExpand))
     // both sides must contribute non-null envelopes; otherwise the inner
     // join is empty-or-degenerate and the stock plan is fine
-    if (sides.exists(_.isEmpty)) None
+    if (sides.exists(_.ext.isEmpty)) None
     else {
-      def largest(xs: Iterable[Double]): Double = xs.reduce((a, b) => math.max(a, b))
-      def smallest(xs: Iterable[Double]): Double = xs.reduce((a, b) => math.min(a, b))
-      def lowerMedian(xs: Array[Double]): Double = {
-        java.util.Arrays.sort(xs)
-        xs((xs.length - 1) / 2)
-      }
-      val all = sides.flatten
-      def extent(lo: Int, hi: Int) = largest(all.map(_(hi))) - smallest(all.map(_(lo)))
-      val span = math.max(extent(1, 2), extent(3, 4))
+      def largest(xs: Seq[Double]): Double = xs.reduce((a, b) => math.max(a, b))
+      def smallest(xs: Seq[Double]): Double = xs.reduce((a, b) => math.min(a, b))
+      val span = math.max(largest(sides.map(_.xmax)) - smallest(sides.map(_.xmin)),
+        largest(sides.map(_.ymax)) - smallest(sides.map(_.ymin)))
+      // the extents are sorted: the lower median is at (n - 1) / 2 and the
+      // max is last (NaN sorts last, as math.max would propagate it)
       val fromExtents = Seq(
-        2.0 * largest(sides.map(s => lowerMedian(s.map(_(0))))),
-        largest(all.map(_(0))) / 64.0).filter(d => d > 0 && d.isFinite)
+        2.0 * largest(sides.map(s => s.ext((s.ext.length - 1) / 2))),
+        largest(sides.map(_.ext.last)) / 64.0).filter(d => d > 0 && d.isFinite)
       if (fromExtents.nonEmpty) Some(largest(fromExtents))
       else if (span > 0 && span.isFinite) Some(span / 4096.0)
       else None
@@ -405,40 +439,40 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
           case None => return j // degenerate stats: leave the stock plan
         }
     }
-    val cell = column(BoundParam(cellValue))
+    val cell = BoundParam(cellValue)
+    def cellOf(v: Expression): Expression = Floor(Divide(v, cell))
 
+    // p's rows with their envelope and, one row per covered cell, the
+    // cell's x and y: (side plan, envelope, cell x, cell y)
     def prep(p: LogicalPlan, g: Expression, expand: Option[Expression],
-        side: String): DataFrame = {
-      val env = s"__graft_env_$side"
-      val cx = s"__graft_cell_x_$side"
-      val cy = s"__graft_cell_y_$side"
-      ofRows(spark, p)
-        .withColumn(env, envelopeOf(g, expand))
-        .withColumn(cx, explode(sequence(
-          floor(col(env).getField("xmin") / cell).cast("long"),
-          floor(col(env).getField("xmax") / cell).cast("long"))))
-        .withColumn(cy, explode(sequence(
-          floor(col(env).getField("ymin") / cell).cast("long"),
-          floor(col(env).getField("ymax") / cell).cast("long"))))
+        side: String): (LogicalPlan, Attribute, Attribute, Attribute) = {
+      val env = Alias(envelope(g, expand), s"__graft_env_$side")()
+      val e = env.toAttribute
+      def cells(child: LogicalPlan, axis: String): Generate = {
+        val gen = Explode(Sequence(cellOf(field(e, s"${axis}min")),
+          cellOf(field(e, s"${axis}max")), None, sessionTz))
+        val out = gen.elementSchema.head
+        Generate(gen, Nil, outer = false, None,
+          Seq(AttributeReference(s"__graft_cell_${axis}_$side", out.dataType, out.nullable)()),
+          child)
+      }
+      val gx = cells(Project(p.output :+ env, p), "x")
+      val gy = cells(gx, "y")
+      (gy, e, gx.generatorOutput.head, gy.generatorOutput.head)
     }
 
-    val lp = prep(l, route.lg, route.lExpand, "l")
-    val rp = prep(r, route.rg, route.rExpand, "r")
-    val lEnv = col("__graft_env_l"); val rEnv = col("__graft_env_r")
+    val (lp, lEnv, lx, ly) = prep(l, route.lg, route.lExpand, "l")
+    val (rp, rEnv, rx, ry) = prep(r, route.rg, route.rExpand, "r")
     // reference point: the min corner of the envelope intersection — it
     // lies in exactly one grid cell, so the pair is emitted exactly once
-    val refX = floor(greatest(lEnv.getField("xmin"), rEnv.getField("xmin")) / cell).cast("long")
-    val refY = floor(greatest(lEnv.getField("ymin"), rEnv.getField("ymin")) / cell).cast("long")
+    def ref(axis: String): Expression =
+      cellOf(Greatest(Seq(field(lEnv, s"${axis}min"), field(rEnv, s"${axis}min"))))
     val boundCond = cond.transform {
       case d: graft.functions.StDWithinExpr => d.copy(third = bind(d.third))
     }
-    val joined = lp.join(rp,
-      col("__graft_cell_x_l") === col("__graft_cell_x_r") &&
-        col("__graft_cell_y_l") === col("__graft_cell_y_r") &&
-        column(boundCond) &&
-        col("__graft_cell_x_l") === refX && col("__graft_cell_y_l") === refY)
-      // restore the original join's schema (attribute order AND exprIds)
-      .select((j.output.map(a => column(a))): _*)
-    joined.queryExecution.analyzed
+    val joinCond = Seq(EqualTo(lx, rx), EqualTo(ly, ry), boundCond,
+      EqualTo(lx, ref("x")), EqualTo(ly, ref("y"))).reduce(And)
+    // restore the original join's schema (attribute order AND exprIds)
+    Project(j.output, Join(lp, rp, Inner, Some(joinCond), JoinHint.NONE))
   }
 }

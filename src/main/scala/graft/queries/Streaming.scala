@@ -380,8 +380,10 @@ object Streaming extends QueryBlock {
         // from a full char_trigrams explode (the e33 fix's streaming twin).
         val model = trisBatch.groupBy(col("tri")).agg(count(lit(1)).as("cnt"))
           .localCheckpoint()
-        val total: Double = model.agg(sum(col("cnt")))
-          .collect()(0).getLong(0).toDouble
+        // an empty corpus has no trigram: the model is empty, no stream
+        // row joins it, and the total is never read
+        val totalRow = model.agg(sum(col("cnt"))).head()
+        val total: Double = if (totalRow.isNullAt(0)) 0.0 else totalRow.getLong(0).toDouble
         val stream = EventStreams.documents(s, dir)
           .filter(col("text").isNotNull)
           .select(col("doc_id"), lower(col("text")).as("t"))
@@ -437,7 +439,12 @@ object Streaming extends QueryBlock {
           java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq.reverse
             .foreach(p => java.nio.file.Files.deleteIfExists(p))
         }
-        s.read.parquet(outDir.toString)
+        // no micro-batch ran when nothing arrived, so nothing was written
+        val appended =
+          if (java.nio.file.Files.exists(outDir)) s.read.parquet(outDir.toString)
+          else s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+            stream.schema)
+        appended
           .groupBy(col("doc_id"), col("tri"))
           .agg(max(col("k")).as("k"), min(col("l")).as("l"))
           .select(col("doc_id"), col("k"),
@@ -620,30 +627,33 @@ object Streaming extends QueryBlock {
           .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
           .option("maxFilesPerTrigger", "1")
           .load(warcDir)
+        // the verdicts of one micro-batch of WARC files
+        def verdicts(batch: DataFrame): DataFrame = {
+          val stripped = Curation.crawlStrip(Curation.crawlRobotsAllowed(s,
+            Curation.crawlRecs(Curation.parseWarc(batch))))
+          val cleaned = graft.operators.LineDedup.cleanAgainst(
+              stripped.select(col("rec_id").as("doc_id"),
+                col("cleaned").as("content")), dfTable, tau = 10)
+            .withColumnRenamed("cleaned", "kept_text")
+            .withColumn("h", sha2(col("kept_text"), 256))
+          val partner = cleaned
+            .join(index, col("p_h") === col("h") && col("p_id") < col("doc_id"))
+            .groupBy(col("doc_id").as("n_id"))
+            .agg(min(col("p_id")).as("partner"))
+          cleaned
+            .join(partner, col("doc_id") === col("n_id"), "left")
+            .join(stripped.select(col("rec_id").as("doc_id"), col("uri")), "doc_id")
+            .select(col("doc_id").as("rec_id"), col("uri"),
+              col("n_lines"), col("n_kept"),
+              when(col("partner").isNotNull, lit("dup"))
+                .otherwise(lit("unique")).as("status"),
+              col("partner"))
+        }
         val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_d17")
         try EventStreams.withSourceSizedWidth(s, raw) {
           val q = raw.writeStream
             .foreachBatch { (batch: DataFrame, _: Long) =>
-              val stripped = Curation.crawlStrip(Curation.crawlRobotsAllowed(s,
-                Curation.crawlRecs(Curation.parseWarc(batch))))
-              val cleaned = graft.operators.LineDedup.cleanAgainst(
-                  stripped.select(col("rec_id").as("doc_id"),
-                    col("cleaned").as("content")), dfTable, tau = 10)
-                .withColumnRenamed("cleaned", "kept_text")
-                .withColumn("h", sha2(col("kept_text"), 256))
-              val partner = cleaned
-                .join(index, col("p_h") === col("h") && col("p_id") < col("doc_id"))
-                .groupBy(col("doc_id").as("n_id"))
-                .agg(min(col("p_id")).as("partner"))
-              cleaned
-                .join(partner, col("doc_id") === col("n_id"), "left")
-                .join(stripped.select(col("rec_id").as("doc_id"), col("uri")), "doc_id")
-                .select(col("doc_id").as("rec_id"), col("uri"),
-                  col("n_lines"), col("n_kept"),
-                  when(col("partner").isNotNull, lit("dup"))
-                    .otherwise(lit("unique")).as("status"),
-                  col("partner"))
-                .write.mode("append").parquet(outDir.toString)
+              verdicts(batch).write.mode("append").parquet(outDir.toString)
             }
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .option("checkpointLocation", ckpt.toString)
@@ -654,7 +664,12 @@ object Streaming extends QueryBlock {
           java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq.reverse
             .foreach(p => java.nio.file.Files.deleteIfExists(p))
         }
-        s.read.parquet(outDir.toString).orderBy(col("rec_id"))
+        // no micro-batch ran when no WARC file arrived, so nothing was
+        // written: the answer is then the verdicts of an empty arrival
+        val all =
+          if (java.nio.file.Files.exists(outDir)) s.read.parquet(outDir.toString)
+          else verdicts(s.read.format("binaryFile").load(warcDir))
+        all.orderBy(col("rec_id"))
       },
       Some("""WITH d AS (SELECT doc_id, source,
             list_concat(list_concat(list_concat(

@@ -15,12 +15,21 @@ object GraftColumnBridge {
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
   /** Wrap an analyzed LogicalPlan as a DataFrame (Dataset.ofRows is
-    * private[sql]) — used by optimizer rules that rebuild a subtree with
-    * the DataFrame API (plans.SpatialJoinRule).
+    * private[sql]) — used by the broadcast route of plans.SpatialJoinRule,
+    * which builds and probes its index through the DataFrame API.
     */
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** The physical plan of an already optimized LogicalPlan, ready to
+    * execute (QueryExecution.prepareExecutedPlan is private[sql]). No
+    * Dataset, no re-analysis and no SQL execution: plans.SpatialJoinRule
+    * collects its cell sample through it at planning time.
+    */
+  def executedPlan(spark: SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): execution.SparkPlan =
+    execution.QueryExecution.prepareExecutedPlan(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** Arity and function builder of the ScalaUDF node that
     * `spark.udf.register(name, f)` installs (graft.GraftExtensions lists

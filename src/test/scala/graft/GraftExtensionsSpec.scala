@@ -9,31 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * a Thrift-gateway or Spark Connect deployment installs the library.
   */
 class GraftExtensionsSpec extends AnyFunSuite {
-
-  /** Run `f` on a fresh session over the shared SparkContext, built with
-    * the extensions and without prepare(). `spark.sql.extensions` is a
-    * STATIC conf read from the SparkContext at session construction —
-    * un-settable on the shared test context — so the spec drives the
-    * identical code path through builder.withExtensions; the conf-string
-    * class loading around it is stock Spark.
-    */
-  private def withExtensionsOnly(f: SparkSession => Unit): Unit = {
-    val prior = TestSpark.spark // ensure the shared context exists
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s = SparkSession.builder()
-        .master(prior.sparkContext.master)
-        .withExtensions(new GraftExtensions())
-        .config("spark.sql.shuffle.partitions", "4")
-        .getOrCreate()
-      assert(s ne prior, "expected a fresh SparkSession instance")
-      f(s)
-    } finally {
-      SparkSession.setDefaultSession(prior)
-      SparkSession.setActiveSession(prior)
-    }
-  }
+  import TestSpark.withExtensionsOnly
 
   test("conf-installed session resolves natives and routes spatial joins without prepare()") {
     withExtensionsOnly { s =>

@@ -410,6 +410,109 @@ class SpatialJoinRuleSpec extends AnyFunSuite {
     }
   }
 
+  /** The job starts and SQL execution starts `body` posts, in bus order.
+    * A fence job before and after `body` brackets them: the listener bus
+    * delivers events in order, so once the closing fence's start is seen,
+    * every event `body` caused has been seen too.
+    */
+  private def posted(body: => Unit): Seq[org.apache.spark.scheduler.SparkListenerEvent] = {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val key = "graft.test.fence"
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerEvent]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = { events.add(js); () }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => events.add(x); ()
+        case _ =>
+      }
+    }
+    def fence(tag: String): Unit = {
+      sc.setLocalProperty(key, tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      ()
+    }
+    def isFence(tag: String)(e: SparkListenerEvent): Boolean = e match {
+      case js: SparkListenerJobStart => Option(js.properties).exists(_.getProperty(key) == tag)
+      case _ => false
+    }
+    sc.addSparkListener(listener)
+    try {
+      fence("open")
+      body
+      fence("close")
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!events.asScala.exists(isFence("close")) && System.nanoTime() < deadline) Thread.sleep(10)
+      val all = events.asScala.toSeq
+      assert(all.exists(isFence("close")), "listener bus did not drain")
+      all.slice(all.indexWhere(isFence("open")) + 1, all.indexWhere(isFence("close")))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("optimizing a routed grid join starts no SQL execution") {
+    // the cell sample is planned and collected without a Dataset, so it
+    // starts no SQL execution of its own (one per sampled side before)
+    val q = rangePts(400, "ga").join(pts(Seq((10L, 50.0, 52.0), (11L, 150.0, 90.0)), "gb"),
+      GeoFunctions.st_dwithin(col("ga"), col("gb"), lit(7.777)))
+    var plan = ""
+    val events = posted { plan = q.queryExecution.optimizedPlan.toString }
+    assert(plan.contains("__graft_cell"), s"dwithin not routed:\n$plan")
+    assert(events.count(_.isInstanceOf[org.apache.spark.scheduler.SparkListenerJobStart]) === 1)
+    assert(events.collect {
+      case e: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart => e
+    }.isEmpty)
+    assert(q.count() === 2)
+  }
+
+  test("the planning job over a multi-partition side runs one stage of one task") {
+    // the sample's limit reads the first partition, which holds SampleRows
+    // rows; collecting the limit's root instead would shuffle every
+    // partition into one (2 stages, 4 tasks)
+    val n = graft.plans.SpatialJoinRule.SampleRows
+    val big = spark.range(0, 3L * n, 1, 3).select(col("id"),
+      GeoFunctions.st_point((col("id") % 1000).cast("double"),
+        (col("id") / 1000).cast("long").cast("double")).as("ga"))
+    val q = big.join(pts(Seq((10L, 50.0, 52.0), (11L, 150.0, 9.0)), "gb"),
+      GeoFunctions.st_dwithin(col("ga"), col("gb"), lit(0.625)))
+    var plan = ""
+    val jobs = posted { plan = q.queryExecution.executedPlan.toString }
+      .collect { case js: org.apache.spark.scheduler.SparkListenerJobStart => js }
+    assert(plan.contains("__graft_cell"), s"dwithin not routed:\n$plan")
+    assert(jobs.length === 1)
+    assert(jobs.head.stageInfos.length === 1)
+    assert(jobs.head.stageInfos.map(_.numTasks).sum === 1)
+    assert(q.count() === 2)
+  }
+
+  test("a routed join over an IN-subquery side matches the unrouted answer on both install paths") {
+    // the spliced nodes keep the side's IN (SELECT ...) filter for the
+    // optimizer batches after the rule (RewritePredicateSubquery among them)
+    def check(s: org.apache.spark.sql.SparkSession): Unit = {
+      s.range(0, 400, 1, 2).selectExpr("id",
+        "st_point(CAST(id % 20 AS DOUBLE) * 10.0, CAST(id DIV 20 AS DOUBLE) * 10.0) AS ga")
+        .createOrReplaceTempView("sj_in_pts")
+      s.range(0, 400, 3).createOrReplaceTempView("sj_in_keep")
+      s.sql("SELECT * FROM VALUES (10L, 50.0D, 52.0D), (11L, 150.0D, 90.0D) AS t(rid, x, y)")
+        .selectExpr("rid", "st_point(x, y) AS gb").createOrReplaceTempView("sj_in_q")
+      def join(hint: String) = s.sql(
+        s"""SELECT $hint p.id, q.rid
+           |FROM (SELECT * FROM sj_in_pts WHERE id IN (SELECT id FROM sj_in_keep)) p
+           |JOIN sj_in_q q ON st_dwithin(p.ga, q.gb, 25.0D)""".stripMargin)
+      val routed = join("")
+      val plan = routed.queryExecution.executedPlan.toString
+      assert(plan.contains("__graft_cell"), s"dwithin not routed:\n$plan")
+      val stock = join("/*+ BROADCAST(q) */")
+      assert(!stock.queryExecution.executedPlan.toString.contains("__graft_cell"))
+      val got = pairs(routed)
+      assert(got.nonEmpty && got.forall(_._1 % 3 == 0))
+      assert(got === pairs(stock))
+    }
+    check(spark)
+    TestSpark.withExtensionsOnly(check)
+  }
+
   test("cross-side equi key disables the rewrite (hash join already avoids BNL)") {
     val l = boxes(Seq((1L, 0.0, 0.0, 10.0, 10.0)), "ga")
     val r = boxes(Seq((1L, 5.0, 5.0, 15.0, 15.0)), "gb").withColumnRenamed("id", "rid")

@@ -171,4 +171,14 @@ class StreamingSpec extends AnyFunSuite {
     val dir = emptyDocuments("graft_d15_empty")
     assert(SparkEntry.queries("d15_stream_incr_dedup")(TestSpark.spark, dir).collect().isEmpty)
   }
+
+  test("d14 stream LM score over an empty documents table returns no rows") {
+    val dir = emptyDocuments("graft_d14_empty")
+    assert(SparkEntry.queries("d14_stream_lm_score")(TestSpark.spark, dir).collect().isEmpty)
+  }
+
+  test("d17 stream crawl over an empty documents table (an empty WARC directory) returns no rows") {
+    val dir = emptyDocuments("graft_d17_empty")
+    assert(SparkEntry.queries("d17_stream_crawl")(TestSpark.spark, dir).collect().isEmpty)
+  }
 }
